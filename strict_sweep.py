@@ -20,6 +20,7 @@ rows-only) are reported as SKIP.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -48,9 +49,12 @@ def main(sf_dir: str) -> int:
 
     import __spark_entry__ as E
 
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
     spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "12g")
         .getOrCreate()

@@ -42,13 +42,7 @@ class EngineConfig:
     """Broadcastable job config (the params.h subset we honor)."""
 
     tessedit_pageseg_mode: int = PSM_AUTO
-    thresholding_method: str = "otsu"  # otsu | adaptive_otsu | sauvola
-    thresholding_tile_size: int = 64  # adaptive tile (thresholder.cpp:247)
-    thresholding_window_size: int = 25  # sauvola window (thresholder.cpp:210)
-    thresholding_kfactor: float = 0.35
     user_defined_dpi: int = 0  # 0 = honor per-row dpi, else override
-    textord_max_noise_size: int = 2  # px; noise grade backstop
-    language_model_penalty_non_dict_word: float = 0.15  # reserved
     user_words: tuple[str, ...] = field(default=())  # extra DAWG words
     # character recognition restriction lists (SetBlackAndWhitelist,
     # src/ccmain/tesseractclass.cpp:531-553)

@@ -8,8 +8,8 @@ RENDERING the rest to PNG media spans (4 words per line, deterministic
 scale/skew per chunk) — so that the full OCR pipeline runs for real while a
 pure-SQL oracle can reconstruct the expected output spans exactly.
 
-Chunking rule (mirrored by the DuckDB oracle in queries.py):
-  words     = split(text, ' ')
+Chunking rule (mirrored by the DuckDB CTE queries._ORACLE_CHUNKS):
+  words     = split(coalesce(text, ''), ' ')
   chunk i   = words[12i : 12i+12]                 (i = 0 .. ceil(n/12)-1)
   kind      = 'text' if i % 3 == 0 else 'media'
   rendering = lines of 4 words, scale = 1 + (doc_id+i) % 2,
@@ -73,6 +73,16 @@ def chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def chunk_lines(chunk: str) -> list[str]:
+    """THE line rule: a chunk's words, WORDS_PER_LINE to a line (the
+    oracles' 4-word-line expression, queries._ORACLE_LINES)."""
+    words = chunk.split(" ")
+    return [
+        " ".join(words[j : j + WORDS_PER_LINE])
+        for j in range(0, len(words), WORDS_PER_LINE)
+    ]
+
+
 def chunk_page_spec(doc_id: int, i: int, chunk: str):
     """THE corpus render rule: chunk text -> PageSpec.  Single source of
     truth shared by the corpus renderer and every engine variant that
@@ -81,11 +91,7 @@ def chunk_page_spec(doc_id: int, i: int, chunk: str):
     from .functions.compose import PageSpec
     from .functions.fonts import text_ink_width
 
-    words = chunk.split(" ")
-    lines = [
-        " ".join(words[j : j + WORDS_PER_LINE])
-        for j in range(0, len(words), WORDS_PER_LINE)
-    ]
+    lines = chunk_lines(chunk)
     scale = 1 + int((doc_id + i) % 2)
     # skew only when the page is wide enough to resolve the 0.005
     # slope grid (sub-pixel-ambiguous below ~150 px — even the

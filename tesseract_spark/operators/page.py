@@ -210,7 +210,7 @@ def _grade_blobs(
     # This is the per-blob analogue of the imagefind halftone verdict
     # (imagefind.cpp:1106-1180 partition scoring) for blobs the mask
     # cascade is too coarse to see.  Pre-gates keep it off glyphs: dense
-    # (>=0.42), at least ~2 glyphs of area, and wider than tall.
+    # (>=0.35), at least ~2 glyphs of area, and wider than tall.
     if ink is not None and labels is not None:
         cand = np.flatnonzero(
             (grade == 0)
@@ -272,8 +272,9 @@ def _grade_blobs(
                 # media rect the golden observes).  A word blob's
                 # columns are uniformly dense, so trimming changes
                 # nothing for glyphs and their concavity lakes stand.
-                # Gated to the carved-density band so intact candidates
-                # never pay.
+                # Gated to the carved-density band [0.35, 0.42): those
+                # candidates run both the direct lake test above and
+                # this retry; denser candidates never pay for it.
                 if density[i] < 0.42:
                     colc = comp.sum(axis=0)
                     bar_c = max(2, int(0.3 * colc.max()))

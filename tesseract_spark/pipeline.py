@@ -58,6 +58,25 @@ OCR_OUT_SCHEMA = T.StructType(
 DEFAULT_SALT = 16
 
 
+def _failed_row(doc_id, pos, ref, wall_ms: float, pid: int) -> dict:
+    """The degraded media span of a page that produced no spans: empty
+    text, n_chars = -1 as the failure marker for lineage/QA."""
+    return {
+        "doc_id": doc_id,
+        "pos": int(pos),
+        "sub": 0,
+        "kind": "media",
+        "text": None,
+        "media_ref": ref,
+        "confidence": 0.0,
+        "n_lines": 0,
+        "n_words": 0,
+        "n_chars": -1,
+        "wall_ms": wall_ms,
+        "partition_id": pid,
+    }
+
+
 def _make_ocr_udf(
     dict_words: list[str] | None,
     dict_patterns: list[str] | None = None,
@@ -116,80 +135,48 @@ def _make_ocr_udf(
                     # miss): keep the span in the document with the same
                     # degraded marker as a corrupt page — silent drops
                     # would be invisible data loss at corpus scale
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "pos": int(pos),
-                            "sub": 0,
-                            "kind": "media",
-                            "text": None,
-                            "media_ref": ref,
-                            "confidence": 0.0,
-                            "n_lines": 0,
-                            "n_words": 0,
-                            "n_chars": -1,
-                            "wall_ms": 0.0,
-                            "partition_id": pid,
-                        }
-                    )
+                    rows.append(_failed_row(doc_id, pos, ref, 0.0, pid))
                     continue
-                else:
-                    # per-page error isolation: a corrupt image must not
-                    # kill the job — emit an empty media span and keep
-                    # going, the reference's degraded-continuation
-                    # semantics (per-page deadline fakes remaining words
-                    # and the run continues, src/ccmain/control.cpp:314-322);
-                    # n_chars = -1 marks the failure for lineage/QA
-                    try:
-                        # format autodetect by content (PNG/JPEG/TIFF —
-                        # baseapi.cpp:1033-1194 ProcessPagesInternal); a
-                        # multipage TIFF contributes every page's spans in
-                        # container order under one media_ref
-                        # (baseapi.cpp:958-998 multipage iteration)
-                        imgs = decode_gray_pages(bytes(png))
-                        spans = []
-                        if adapt_carryover and dawg is not None:
-                            if doc_id != carry_doc:
-                                from .lstm.adaptive import AdaptiveTemplates
-                                from .lstm.langmodel import DocumentWords
+                # per-page error isolation: a corrupt image must not kill
+                # the job — emit an empty media span and keep going, the
+                # reference's degraded-continuation semantics (per-page
+                # deadline fakes remaining words and the run continues,
+                # src/ccmain/control.cpp:314-322)
+                try:
+                    # format autodetect by content (PNG/JPEG/TIFF —
+                    # baseapi.cpp:1033-1194 ProcessPagesInternal); a
+                    # multipage TIFF contributes every page's spans in
+                    # container order under one media_ref
+                    # (baseapi.cpp:958-998 multipage iteration)
+                    imgs = decode_gray_pages(bytes(png))
+                    spans = []
+                    if adapt_carryover and dawg is not None:
+                        if doc_id != carry_doc:
+                            from .lstm.adaptive import AdaptiveTemplates
+                            from .lstm.langmodel import DocumentWords
 
-                                carry_doc = doc_id
-                                carry_templates = AdaptiveTemplates()
-                                carry_doc_words = DocumentWords()
-                            for img in imgs:
-                                sp, _words, _layout = recognize_page_detail(
-                                    img, int(dpi), dawg, net,
-                                    carry_adapted=carry_templates,
-                                    charlists=charlists,
-                                    doc_words=carry_doc_words,
-                                )
-                                spans.extend(sp)
-                        else:
-                            for img in imgs:
-                                sp, _layout = recognize_page(
-                                    img, int(dpi), dawg, net,
-                                    charlists=charlists,
-                                )
-                                spans.extend(sp)
-                    except Exception:
-                        wall = (time.perf_counter() - t0) * 1000.0
-                        rows.append(
-                            {
-                                "doc_id": doc_id,
-                                "pos": int(pos),
-                                "sub": 0,
-                                "kind": "media",
-                                "text": None,
-                                "media_ref": ref,
-                                "confidence": 0.0,
-                                "n_lines": 0,
-                                "n_words": 0,
-                                "n_chars": -1,
-                                "wall_ms": wall,
-                                "partition_id": pid,
-                            }
-                        )
-                        continue
+                            carry_doc = doc_id
+                            carry_templates = AdaptiveTemplates()
+                            carry_doc_words = DocumentWords()
+                        for img in imgs:
+                            sp, _words, _layout = recognize_page_detail(
+                                img, int(dpi), dawg, net,
+                                carry_adapted=carry_templates,
+                                charlists=charlists,
+                                doc_words=carry_doc_words,
+                            )
+                            spans.extend(sp)
+                    else:
+                        for img in imgs:
+                            sp, _layout = recognize_page(
+                                img, int(dpi), dawg, net,
+                                charlists=charlists,
+                            )
+                            spans.extend(sp)
+                except Exception:
+                    wall = (time.perf_counter() - t0) * 1000.0
+                    rows.append(_failed_row(doc_id, pos, ref, wall, pid))
+                    continue
                 wall = (time.perf_counter() - t0) * 1000.0
                 for sub, s in enumerate(spans):
                     rows.append(
@@ -217,14 +204,12 @@ def _make_ocr_udf(
     return ocr_batches
 
 
-
 def ocr_documents(
     spark: SparkSession,
     docs: DataFrame,
     media: DataFrame,
     dict_words: list[str] | None = None,
     num_partitions: int | None = None,
-    broadcast_media: bool | None = None,
     dict_patterns: list[str] | None = None,
     adapt_carryover: bool = False,
     charlists: tuple[str, str, str] | None = None,
@@ -252,7 +237,7 @@ def ocr_documents(
     return ocr_from_parts(
         spark, text_rows, media_refs, media,
         dict_words=dict_words, num_partitions=num_partitions,
-        broadcast_media=broadcast_media, dict_patterns=dict_patterns,
+        dict_patterns=dict_patterns,
         adapt_carryover=adapt_carryover, charlists=charlists,
     )
 
@@ -264,7 +249,6 @@ def ocr_from_parts(
     media: DataFrame,
     dict_words: list[str] | None = None,
     num_partitions: int | None = None,
-    broadcast_media: bool | None = None,
     media_prebucketed: bool = False,
     dict_patterns: list[str] | None = None,
     adapt_carryover: bool = False,
@@ -316,10 +300,6 @@ def ocr_from_parts(
         # exactly one exchange, on the refs side
         media_rows = media_refs.join(
             media_side.hint("shuffle_hash"), "media_ref", "left"
-        )
-    elif broadcast_media:
-        media_rows = media_refs.repartition(num_partitions, "media_ref").join(
-            F.broadcast(media_side), "media_ref", "left"
         )
     else:
         # pre-partition BOTH sides on media_ref so the join reuses these

@@ -6,7 +6,11 @@ explicitly to absorb summation-order differences.
 Two groups:
 - OCR-pipeline queries (the north star): run the real render->OCR pipeline
   over the corpus derived from ``documents`` (derived.py); the oracle
-  reconstructs expected spans with pure string SQL.
+  reconstructs expected spans with pure string SQL.  To add one that
+  re-renders chunks, give ``_ocr_chunks`` a ``make_rows`` (the page
+  render + result rows; see its docstring) and write the oracle as
+  ``WITH {_ORACLE_CHUNKS} SELECT ... FROM chunks WHERE "offset" % 3 <> 0
+  AND doc_id % N = 0``, with ``_ORACLE_LINES`` for the expected text.
 - Operator analogues (SURVEY §2.2-§2.8) + training-data-pipeline operators
   (dedup, similarity search, text analysis) over the TPC-H-ish tables.
 """
@@ -22,6 +26,77 @@ from pyspark.sql import functions as F
 # OCR pipeline queries
 # --------------------------------------------------------------------------
 
+# THE chunk rule of derived.chunked as a DuckDB CTE named ``chunks``: one
+# row per 12-word chunk, (doc_id, "offset", cw) with cw the chunk's word
+# list.  NULL text chunks as '' exactly as derived.chunked does.
+_ORACLE_CHUNKS = """chunks AS (
+  SELECT doc_id, CAST(g.i AS INT) AS "offset",
+         list_slice(words, g.i*12 + 1, g.i*12 + 12) AS cw
+  FROM (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS words
+        FROM documents) w,
+  LATERAL (
+    SELECT unnest(generate_series(0, CAST(ceil(len(words)/12.0) AS BIGINT) - 1)) AS i
+  ) g
+)"""
+
+# a chunk's 4-word lines joined by newlines (derived.chunk_lines): the
+# text every clean media page recognizes to
+_ORACLE_LINES = """array_to_string(
+    list_transform(
+      generate_series(0, CAST(ceil(len(cw)/4.0) AS BIGINT) - 1),
+      j -> array_to_string(cw[j*4 + 1 : j*4 + 4], ' ')),
+    chr(10))"""
+
+
+def _ocr_chunks(
+    spark: SparkSession,
+    sf_dir: str,
+    every: int | None,
+    schema: str,
+    make_rows: Callable[[], Callable[[list[tuple[int, int, str]]], list[dict]]],
+) -> DataFrame:
+    """THE chunk-OCR operator behind every re-rendering registry query.
+
+    Reads derived.chunked, keeps the media chunks of every ``every``-th
+    document (all documents when None), spreads them round-robin over
+    defaultParallelism tasks and runs one mapInPandas — zero shuffles
+    besides that one round-robin exchange; each chunk row is a complete
+    result.  ``make_rows()`` runs once per task, so nets, language packs
+    and fonts load once per worker; it returns a callable from a whole
+    Arrow batch's ``[(doc_id, i, chunk), ...]`` to its list of row dicts
+    (keyed by the ``schema`` DDL's column names)."""
+    import pandas as pd
+
+    from .derived import chunked
+
+    names = [col.split()[0] for col in schema.split(",")]
+    keep = F.col("kind") == "media"
+    if every is not None:
+        keep = keep & (F.col("doc_id") % every == 0)
+
+    def udf(batches):
+        rows_of = make_rows()
+        for pdf in batches:
+            chunks = [
+                (int(doc_id), int(i), chunk)
+                for doc_id, i, chunk in zip(
+                    pdf["doc_id"], pdf["i"], pdf["chunk_text"]
+                )
+            ]
+            yield pd.DataFrame(rows_of(chunks), columns=names)
+
+    return (
+        chunked(spark, sf_dir)
+        .filter(keep)
+        .repartition(spark.sparkContext.defaultParallelism)
+        .mapInPandas(udf, schema=schema)
+    )
+
+
+def _text_of(spans) -> str:
+    """The page's text spans joined by newlines (the oracle's line text)."""
+    return "\n".join(s.text for s in spans if s.kind == "text")
+
 
 def q_ocr_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: derived interleaved corpus -> full OCR -> ordered spans.
@@ -34,26 +109,14 @@ def q_ocr_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ocr_flagship(spark, sf_dir)
 
 
-ORACLE_OCR_EXTRACT = """
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS words FROM documents
-), c AS (
-  SELECT doc_id, CAST(g.i AS INT) AS "offset",
-         list_slice(words, g.i*12 + 1, g.i*12 + 12) AS cw
-  FROM w, LATERAL (
-    SELECT unnest(generate_series(0, CAST(ceil(len(words)/12.0) AS BIGINT) - 1)) AS i
-  ) g
-)
+ORACLE_OCR_EXTRACT = f"""
+WITH {_ORACLE_CHUNKS}
 SELECT doc_id, "offset", 'text' AS kind,
   CASE WHEN "offset" % 3 = 0 THEN array_to_string(cw, ' ')
-       ELSE array_to_string(
-              list_transform(
-                generate_series(0, CAST(ceil(len(cw)/4.0) AS BIGINT) - 1),
-                j -> array_to_string(cw[j*4 + 1 : j*4 + 4], ' ')),
-              chr(10))
+       ELSE {_ORACLE_LINES}
   END AS text,
   CAST(NULL AS VARCHAR) AS media_ref
-FROM c
+FROM chunks
 """
 
 
@@ -67,17 +130,14 @@ def q_ocr_vgsl_extract(
     greedy CTC (lstm/tessdata.py, lstm/fixture_model.py; reference chain
     tessdatamanager.cpp + lstmrecognizer.cpp:75-291).
 
-    Render + decode run in ONE mapInPandas over the chunk rows — zero
-    shuffles before the final stitch-free union (each chunk row is already
-    a complete span).  The executor-side model singleton loads the
-    serialized traineddata once per worker (DawgCache-style sharing).
+    Render + decode run in the one chunk-OCR mapInPandas, unioned with
+    the pass-through text chunks (each chunk row is already a complete
+    span).  The executor-side model singleton loads the serialized
+    traineddata once per worker (DawgCache-style sharing).
     """
-    import pandas as pd
-
     from .derived import chunked
 
-    ch = chunked(spark, sf_dir)
-    text_rows = ch.filter(F.col("kind") == "text").select(
+    text_rows = chunked(spark, sf_dir).filter(F.col("kind") == "text").select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("i").cast("int").alias("offset"),
         F.lit("text").alias("kind"),
@@ -85,56 +145,40 @@ def q_ocr_vgsl_extract(
         F.lit(None).cast("string").alias("media_ref"),
     )
 
-    def udf(batches):
+    def make_rows():
         from .derived import chunk_page_spec
         from .functions.compose import compose_page
         from .lstm.fixture_model import get_vgsl_model
         from .operators.recognize import recognize_pages_vgsl
 
         model = get_vgsl_model()
-        for pdf in batches:
-            # the SAME render rule as the corpus (single source of
-            # truth: derived.chunk_page_spec); decode the WHOLE Arrow
-            # chunk in one cross-page batched LSTM forward — the width
-            # buckets fill with every page's lines, not one page's
-            imgs = [
-                compose_page(
-                    chunk_page_spec(int(doc_id), int(i), chunk)
-                ).image
-                for doc_id, i, chunk in zip(
-                    pdf["doc_id"], pdf["i"], pdf["chunk_text"]
-                )
-            ]
-            results = recognize_pages_vgsl(
-                imgs, model=model, use_beam=use_beam
-            )
-            rows = [
+
+        def rows(chunks):
+            # the SAME render rule as the corpus (single source of truth:
+            # derived.chunk_page_spec); decode the WHOLE Arrow chunk in
+            # one cross-page batched LSTM forward — the width buckets
+            # fill with every page's lines, not one page's
+            imgs = [compose_page(chunk_page_spec(*c)).image for c in chunks]
+            results = recognize_pages_vgsl(imgs, model=model, use_beam=use_beam)
+            return [
                 {
-                    "doc_id": int(doc_id),
-                    "offset": int(i),
+                    "doc_id": doc_id,
+                    "offset": i,
                     "kind": "text",
-                    "text": "\n".join(
-                        s.text for s in spans if s.kind == "text"
-                    ),
+                    "text": _text_of(spans),
                     "media_ref": None,
                 }
-                for (doc_id, i), (spans, _layout) in zip(
-                    zip(pdf["doc_id"], pdf["i"]), results
-                )
+                for (doc_id, i, _c), (spans, _layout) in zip(chunks, results)
             ]
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "offset", "kind", "text", "media_ref"],
-            )
 
-    media_rows = (
-        ch.filter(F.col("kind") == "media")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .mapInPandas(
-            udf,
-            schema="doc_id long, offset int, kind string, text string, "
-            "media_ref string",
-        )
+        return rows
+
+    media_rows = _ocr_chunks(
+        spark,
+        sf_dir,
+        None,
+        "doc_id long, offset int, kind string, text string, media_ref string",
+        make_rows,
     )
     return text_rows.unionByName(media_rows)
 
@@ -171,66 +215,43 @@ def q_line_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross ink, linefind.cpp:207).  The page stage must remove all three
     rules morphologically and still decode the text EXACTLY; the oracle
     knows the expected text and the exact rule counts (2 vertical + the
-    strike-through merged to 1 horizontal) by construction.
+    strike-through merged to 1 horizontal) by construction."""
 
-    Zero shuffles: one mapInPandas over the chunk rows; each row is a
-    complete result."""
-    import pandas as pd
-
-    from .derived import WORDS_PER_LINE, chunked
-
-    ch = chunked(spark, sf_dir).filter(
-        (F.col("kind") == "media") & (F.col("doc_id") % 7 == 0)
-    )
-
-    def udf(batches):
+    def make_rows():
+        from .derived import chunk_lines
         from .functions.compose import MARGIN, PageSpec, compose_page
         from .functions.fonts import BASELINE
         from .operators.recognize import recognize_page
 
         S = 3  # fixed render scale for the strike fixture
-        for pdf in batches:
-            rows = []
-            for doc_id, i, chunk in zip(
-                pdf["doc_id"], pdf["i"], pdf["chunk_text"]
-            ):
-                words = chunk.split(" ")
-                lines = [
-                    " ".join(words[j * WORDS_PER_LINE : (j + 1) * WORDS_PER_LINE])
-                    for j in range(-(-len(words) // WORDS_PER_LINE))
-                ]
-                page = compose_page(
-                    PageSpec(paragraphs=[lines], scale=S, skew=0.0)
-                )
-                img = page.image.copy()
-                h, w = img.shape
-                ry = MARGIN * S + (BASELINE + 2) * S  # mid-descender strike
-                img[ry : ry + 3, 4 : w - 4] = 0
-                img[4 : h - 4, 4:7] = 0
-                img[4 : h - 4, w - 7 : w - 4] = 0
-                spans, layout = recognize_page(img, 300)
-                rows.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "offset": int(i),
-                        "v_rules": int(layout.v_rules),
-                        "h_rules": int(layout.h_rules),
-                        "text": "\n".join(
-                            s.text for s in spans if s.kind == "text"
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "offset", "v_rules", "h_rules", "text"]
-            )
 
-    return (
-        ch.repartition(spark.sparkContext.defaultParallelism)
-        .mapInPandas(
-            udf,
-            schema="doc_id long, offset int, v_rules int, h_rules int, "
-            "text string",
-        )
+        def row(doc_id, i, chunk):
+            page = compose_page(
+                PageSpec(paragraphs=[chunk_lines(chunk)], scale=S, skew=0.0)
+            )
+            img = page.image.copy()
+            h, w = img.shape
+            ry = MARGIN * S + (BASELINE + 2) * S  # mid-descender strike
+            img[ry : ry + 3, 4 : w - 4] = 0
+            img[4 : h - 4, 4:7] = 0
+            img[4 : h - 4, w - 7 : w - 4] = 0
+            spans, layout = recognize_page(img, 300)
+            return {
+                "doc_id": doc_id,
+                "offset": i,
+                "v_rules": int(layout.v_rules),
+                "h_rules": int(layout.h_rules),
+                "text": _text_of(spans),
+            }
+
+        return lambda chunks: [row(*c) for c in chunks]
+
+    return _ocr_chunks(
+        spark,
+        sf_dir,
+        7,
+        "doc_id long, offset int, v_rules int, h_rules int, text string",
+        make_rows,
     )
 
 
@@ -249,98 +270,71 @@ def q_equation_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
     math tokens; the paragraph must stay kind='text' (a math partition
     with same-line text neighbours keeps the text flow) while
     inline_equation_words counts exactly the injected tokens —
-    ``n_inline`` is replayed arithmetically in the oracle.
+    ``n_inline`` is replayed arithmetically in the oracle."""
 
-    Zero shuffles: one mapInPandas; each chunk row is a complete result."""
-    import pandas as pd
-
-    from .derived import WORDS_PER_LINE, chunked
-
-    ch = chunked(spark, sf_dir).filter(
-        (F.col("kind") == "media") & (F.col("doc_id") % 11 == 0)
-    )
-
-    def udf(batches):
+    def make_rows():
+        from .derived import chunk_lines
         from .functions.compose import PageSpec, compose_page
         from .lstm.templates import get_net_math
         from .operators.equation import inline_equation_words
         from .operators.recognize import recognize_page
 
         net = get_net_math()
-        for pdf in batches:
-            rows = []
-            for doc_id, i, chunk in zip(
-                pdf["doc_id"], pdf["i"], pdf["chunk_text"]
-            ):
-                doc_id, i = int(doc_id), int(i)
-                a = (doc_id * 7 + i * 3) % 90 + 10
-                b = (doc_id * 13 + i * 5) % 90 + 10
-                eq = f"{a}+{b}={a + b} {a}<{a + b}"
-                words = chunk.split(" ")
-                # inline injection: replace 1-2 prose words with math
-                # tokens (adjacent slots, deterministic position)
-                n_inj = min(1 + (doc_id + i) % 2, len(words))
-                k1 = (doc_id + 3 * i) % len(words)
-                for j in range(n_inj):
-                    words[(k1 + j) % len(words)] = f"{a + j}+{b}"
-                lines = [
-                    " ".join(words[j * WORDS_PER_LINE : (j + 1) * WORDS_PER_LINE])
-                    for j in range(-(-len(words) // WORDS_PER_LINE))
-                ]
-                # fixed full-width lead line: keeps the prose partition
-                # wider and taller than the equation so the satellite
-                # merge's bounds check (ProcessMathBlockSatelliteParts,
-                # equationdetect.cpp:1325-1328) correctly leaves it text
-                # even when the chunk tail is a one-word line — without
-                # it a short trailing prose line horizontally inside the
-                # equation IS a reference satellite and must merge
-                lead = "the quick brown fox jumps over the lazy dog once more"
-                page = compose_page(PageSpec(paragraphs=[[lead, *lines], [eq]]))
-                spans, _ = recognize_page(page.image, 300, net=net)
-                prose_words = [
-                    w
-                    for s in spans
-                    if s.kind == "text"
-                    for w in s.text.split()
-                ]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "offset": i,
-                        "kinds": ",".join(s.kind for s in spans),
-                        "eq_text": "\n".join(
-                            s.text for s in spans if s.kind == "equation"
-                        ),
-                        "n_inline": len(inline_equation_words(prose_words)),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "offset", "kinds", "eq_text", "n_inline"],
-            )
 
-    return ch.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        udf,
-        schema="doc_id long, offset int, kinds string, eq_text string,"
-        " n_inline long",
+        def row(doc_id, i, chunk):
+            a = (doc_id * 7 + i * 3) % 90 + 10
+            b = (doc_id * 13 + i * 5) % 90 + 10
+            eq = f"{a}+{b}={a + b} {a}<{a + b}"
+            words = chunk.split(" ")
+            # inline injection: replace 1-2 prose words with math tokens
+            # (adjacent slots, deterministic position)
+            n_inj = min(1 + (doc_id + i) % 2, len(words))
+            k1 = (doc_id + 3 * i) % len(words)
+            for j in range(n_inj):
+                words[(k1 + j) % len(words)] = f"{a + j}+{b}"
+            # fixed full-width lead line: keeps the prose partition wider
+            # and taller than the equation so the satellite merge's
+            # bounds check (ProcessMathBlockSatelliteParts,
+            # equationdetect.cpp:1325-1328) correctly leaves it text even
+            # when the chunk tail is a one-word line — without it a short
+            # trailing prose line horizontally inside the equation IS a
+            # reference satellite and must merge
+            lead = "the quick brown fox jumps over the lazy dog once more"
+            lines = chunk_lines(" ".join(words))
+            page = compose_page(PageSpec(paragraphs=[[lead, *lines], [eq]]))
+            spans, _ = recognize_page(page.image, 300, net=net)
+            prose_words = [
+                w for s in spans if s.kind == "text" for w in s.text.split()
+            ]
+            return {
+                "doc_id": doc_id,
+                "offset": i,
+                "kinds": ",".join(s.kind for s in spans),
+                "eq_text": "\n".join(
+                    s.text for s in spans if s.kind == "equation"
+                ),
+                "n_inline": len(inline_equation_words(prose_words)),
+            }
+
+        return lambda chunks: [row(*c) for c in chunks]
+
+    return _ocr_chunks(
+        spark,
+        sf_dir,
+        11,
+        "doc_id long, offset int, kinds string, eq_text string, n_inline long",
+        make_rows,
     )
 
 
-ORACLE_EQUATION_REGIONS = """
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS words FROM documents
-), c AS (
-  SELECT doc_id, CAST(g.i AS INT) AS "offset"
-  FROM w, LATERAL (
-    SELECT unnest(generate_series(0, CAST(ceil(len(words)/12.0) AS BIGINT) - 1)) AS i
-  ) g
-), e AS (
-  SELECT c.doc_id, "offset",
-         (c.doc_id*7 + "offset"*3) % 90 + 10 AS a,
-         (c.doc_id*13 + "offset"*5) % 90 + 10 AS b,
-         least(12, len(w.words) - 12*"offset") AS chunk_len
-  FROM c JOIN w ON c.doc_id = w.doc_id
-  WHERE "offset" % 3 <> 0 AND c.doc_id % 11 = 0
+ORACLE_EQUATION_REGIONS = f"""
+WITH {_ORACLE_CHUNKS}, e AS (
+  SELECT doc_id, "offset",
+         (doc_id*7 + "offset"*3) % 90 + 10 AS a,
+         (doc_id*13 + "offset"*5) % 90 + 10 AS b,
+         len(cw) AS chunk_len
+  FROM chunks
+  WHERE "offset" % 3 <> 0 AND doc_id % 11 = 0
 )
 SELECT doc_id, "offset", 'text,equation' AS kinds,
        CAST(a AS VARCHAR) || '+' || CAST(b AS VARCHAR) || '=' ||
@@ -364,105 +358,57 @@ def q_underline_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     otherwise.  The page stage must keep it off the separator path
     (linefind.cpp:207-213 underline guard), separate the bar, restore the
     characters, and decode the text EXACTLY; the oracle knows the text
-    and the counts (1 underline, 0 rules) by construction.
+    and the counts (1 underline, 0 rules) by construction."""
 
-    Zero shuffles: one mapInPandas; each chunk row is a complete result."""
-    import pandas as pd
-
-    from .derived import WORDS_PER_LINE, chunked
-
-    ch = chunked(spark, sf_dir).filter(
-        (F.col("kind") == "media") & (F.col("doc_id") % 13 == 0)
-    )
-
-    def udf(batches):
+    def make_rows():
+        from .derived import chunk_lines
         from .functions.compose import MARGIN, PageSpec, compose_page
         from .functions.fonts import BASELINE, render_line
         from .operators.recognize import recognize_page
 
         S = 3
-        for pdf in batches:
-            rows = []
-            for doc_id, i, chunk in zip(
-                pdf["doc_id"], pdf["i"], pdf["chunk_text"]
-            ):
-                doc_id, i = int(doc_id), int(i)
-                words = chunk.split(" ")
-                lines = [
-                    " ".join(
-                        words[j * WORDS_PER_LINE : (j + 1) * WORDS_PER_LINE]
-                    )
-                    for j in range(-(-len(words) // WORDS_PER_LINE))
-                ]
-                page = compose_page(
-                    PageSpec(paragraphs=[lines], scale=S, skew=0.0)
-                )
-                img = page.image.copy()
-                lw = render_line(lines[0], S).shape[1]
-                uy = MARGIN * S + BASELINE * S + 1
-                img[uy : uy + 3, MARGIN * S - 2 : MARGIN * S + lw + 2] = 0
-                spans, layout = recognize_page(img, 300)
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "offset": i,
-                        "n_underlines": int(layout.n_underlines),
-                        "rules": int(layout.h_rules + layout.v_rules),
-                        "text": "\n".join(
-                            s.text for s in spans if s.kind == "text"
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "offset", "n_underlines", "rules", "text"],
-            )
 
-    return ch.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        udf,
-        schema="doc_id long, offset int, n_underlines int, rules int, "
-        "text string",
+        def row(doc_id, i, chunk):
+            lines = chunk_lines(chunk)
+            page = compose_page(PageSpec(paragraphs=[lines], scale=S, skew=0.0))
+            img = page.image.copy()
+            lw = render_line(lines[0], S).shape[1]
+            uy = MARGIN * S + BASELINE * S + 1
+            img[uy : uy + 3, MARGIN * S - 2 : MARGIN * S + lw + 2] = 0
+            spans, layout = recognize_page(img, 300)
+            return {
+                "doc_id": doc_id,
+                "offset": i,
+                "n_underlines": int(layout.n_underlines),
+                "rules": int(layout.h_rules + layout.v_rules),
+                "text": _text_of(spans),
+            }
+
+        return lambda chunks: [row(*c) for c in chunks]
+
+    return _ocr_chunks(
+        spark,
+        sf_dir,
+        13,
+        "doc_id long, offset int, n_underlines int, rules int, text string",
+        make_rows,
     )
 
 
-ORACLE_UNDERLINE_STATS = """
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS words FROM documents
-), c AS (
-  SELECT doc_id, CAST(g.i AS INT) AS "offset",
-         list_slice(words, g.i*12 + 1, g.i*12 + 12) AS cw
-  FROM w, LATERAL (
-    SELECT unnest(generate_series(0, CAST(ceil(len(words)/12.0) AS BIGINT) - 1)) AS i
-  ) g
-)
+ORACLE_UNDERLINE_STATS = f"""
+WITH {_ORACLE_CHUNKS}
 SELECT doc_id, "offset", 1 AS n_underlines, 0 AS rules,
-  array_to_string(
-    list_transform(
-      generate_series(0, CAST(ceil(len(cw)/4.0) AS BIGINT) - 1),
-      j -> array_to_string(cw[j*4 + 1 : j*4 + 4], ' ')),
-    chr(10)) AS text
-FROM c
+  {_ORACLE_LINES} AS text
+FROM chunks
 WHERE "offset" % 3 <> 0 AND doc_id % 13 = 0
 """
 
 
-ORACLE_LINE_REMOVAL = """
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS words FROM documents
-), c AS (
-  SELECT doc_id, CAST(g.i AS INT) AS "offset",
-         list_slice(words, g.i*12 + 1, g.i*12 + 12) AS cw
-  FROM w, LATERAL (
-    SELECT unnest(generate_series(0, CAST(ceil(len(words)/12.0) AS BIGINT) - 1)) AS i
-  ) g
-)
+ORACLE_LINE_REMOVAL = f"""
+WITH {_ORACLE_CHUNKS}
 SELECT doc_id, "offset", 2 AS v_rules, 1 AS h_rules,
-  array_to_string(
-    list_transform(
-      generate_series(0, CAST(ceil(len(cw)/4.0) AS BIGINT) - 1),
-      j -> array_to_string(cw[j*4 + 1 : j*4 + 4], ' ')),
-    chr(10)) AS text
-FROM c
+  {_ORACLE_LINES} AS text
+FROM chunks
 WHERE "offset" % 3 <> 0 AND doc_id % 7 = 0
 """
 
@@ -492,22 +438,12 @@ def q_multilang_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
     retry through the other pack, SelectBestWords keeps the better aligned
     word-run, and the bidi walk re-assembles logical order.  The result
     must be the LOGICAL text (the transliterated chunk) plus the winning
-    language name per page.
+    language name per page."""
 
-    Zero shuffles: one mapInPandas over chunk rows; pages are independent
-    (a fresh MRU state per page keeps results partition-invariant)."""
-    import pandas as pd
-
-    from .derived import WORDS_PER_LINE, chunked
-
-    ch = chunked(spark, sf_dir).filter(
-        (F.col("kind") == "media") & (F.col("doc_id") % 5 == 0)
-    )
-
-    def udf(batches):
+    def make_rows():
         import re
 
-        from .derived import chunk_page_spec
+        from .derived import chunk_lines, chunk_page_spec
         from .functions.compose import compose_page
         from .operators.multilang import MultiLangState, get_lang_packs
         from .operators.recognize import recognize_page_detail
@@ -515,66 +451,47 @@ def q_multilang_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
         packs = get_lang_packs("eng+heb")
         trans = str.maketrans("abcdefghijklmnopqrstuvwxyz", _heb26())
         pure = re.compile(r"[a-z ]+\Z")
-        for pdf in batches:
-            rows = []
-            for doc_id, i, chunk in zip(
-                pdf["doc_id"], pdf["i"], pdf["chunk_text"]
-            ):
-                doc_id, i = int(doc_id), int(i)
-                heb = (doc_id + i) % 2 == 1 and bool(pure.fullmatch(chunk))
-                if heb:
-                    words = chunk.translate(trans).split(" ")
-                    # visual RTL raster: per 4-word line, reverse word
-                    # order and each word's characters
-                    render = " ".join(
-                        " ".join(
-                            w[::-1]
-                            for w in reversed(words[j : j + WORDS_PER_LINE])
-                        )
-                        for j in range(0, len(words), WORDS_PER_LINE)
-                    )
-                else:
-                    render = chunk
-                page = compose_page(chunk_page_spec(doc_id, i, render))
-                state = MultiLangState(packs)
-                spans, _w, _l = recognize_page_detail(
-                    page.image, 300, packs=packs, lang_state=state
-                )
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "offset": i,
-                        "lang": packs[state.mru].name,
-                        "text": "\n".join(
-                            s.text for s in spans if s.kind == "text"
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "offset", "lang", "text"]
-            )
 
-    return ch.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        udf, schema="doc_id long, offset int, lang string, text string"
+        def row(doc_id, i, chunk):
+            render = chunk
+            if (doc_id + i) % 2 == 1 and pure.fullmatch(chunk):
+                # visual RTL raster: per 4-word line, reverse word order
+                # and each word's characters
+                render = " ".join(
+                    " ".join(w[::-1] for w in reversed(ln.split(" ")))
+                    for ln in chunk_lines(chunk.translate(trans))
+                )
+            page = compose_page(chunk_page_spec(doc_id, i, render))
+            # a fresh MRU state per page keeps results partition-invariant
+            state = MultiLangState(packs)
+            spans, _w, _l = recognize_page_detail(
+                page.image, 300, packs=packs, lang_state=state
+            )
+            return {
+                "doc_id": doc_id,
+                "offset": i,
+                "lang": packs[state.mru].name,
+                "text": _text_of(spans),
+            }
+
+        return lambda chunks: [row(*c) for c in chunks]
+
+    return _ocr_chunks(
+        spark,
+        sf_dir,
+        5,
+        "doc_id long, offset int, lang string, text string",
+        make_rows,
     )
 
 
-ORACLE_MULTILANG_RETRY = """
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS words FROM documents
-), c AS (
-  SELECT doc_id, CAST(g.i AS INT) AS "offset",
-         list_slice(words, g.i*12 + 1, g.i*12 + 12) AS cw
-  FROM w, LATERAL (
-    SELECT unnest(generate_series(0, CAST(ceil(len(words)/12.0) AS BIGINT) - 1)) AS i
-  ) g
-  WHERE doc_id % 5 = 0
-), m AS (
+ORACLE_MULTILANG_RETRY = f"""
+WITH {_ORACLE_CHUNKS}, m AS (
   SELECT doc_id, "offset",
          (doc_id + "offset") % 2 = 1
            AND regexp_matches(array_to_string(cw, ' '), '^[a-z ]+$') AS heb,
          cw
-  FROM c WHERE "offset" % 3 <> 0
+  FROM chunks WHERE "offset" % 3 <> 0 AND doc_id % 5 = 0
 ), t AS (
   SELECT doc_id, "offset", heb,
          CASE WHEN heb THEN list_transform(cw,
@@ -585,11 +502,7 @@ WITH w AS (
 )
 SELECT doc_id, "offset",
   CASE WHEN heb THEN 'heb' ELSE 'eng' END AS lang,
-  array_to_string(
-    list_transform(
-      generate_series(0, CAST(ceil(len(cw)/4.0) AS BIGINT) - 1),
-      j -> array_to_string(cw[j*4 + 1 : j*4 + 4], ' ')),
-    chr(10)) AS text
+  {_ORACLE_LINES} AS text
 FROM t
 """
 
@@ -609,18 +522,9 @@ def q_devanagari_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
     eating long bars as separator rules (PrepareForPageseg ordering),
     and (4) decode the cells through the extended net.  Result: the
     logical text plus the split count — exactly (chars - words), one cut
-    per intra-word kern gap, which the SQL oracle recomputes.
+    per intra-word kern gap, which the SQL oracle recomputes."""
 
-    Zero shuffles: one mapInPandas; each chunk row is independent."""
-    import pandas as pd
-
-    from .derived import WORDS_PER_LINE, chunked
-
-    ch = chunked(spark, sf_dir).filter(
-        (F.col("kind") == "media") & (F.col("doc_id") % 9 == 0)
-    )
-
-    def udf(batches):
+    def make_rows():
         import re
 
         from .derived import chunk_page_spec
@@ -634,67 +538,44 @@ def q_devanagari_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
             "abcdefghijklmnopqrstuvwxyz", (DEVA_CHARSET * 3)[:26]
         )
         pure = re.compile(r"[a-z ]+\Z")
-        for pdf in batches:
-            rows = []
-            for doc_id, i, chunk in zip(
-                pdf["doc_id"], pdf["i"], pdf["chunk_text"]
-            ):
-                doc_id, i = int(doc_id), int(i)
-                if not pure.fullmatch(chunk):
-                    continue
-                dv = chunk.translate(trans)
-                page = compose_page(chunk_page_spec(doc_id, i, dv))
-                spans, layout = recognize_page(
-                    page.image, 300, net=net, deva_split=True
-                )
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "offset": i,
-                        "n_splits": layout.deva_splits,
-                        "text": "\n".join(
-                            s.text for s in spans if s.kind == "text"
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "offset", "n_splits", "text"]
-            )
 
-    return ch.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        udf, schema="doc_id long, offset int, n_splits long, text string"
+        def row(doc_id, i, chunk):
+            dv = chunk.translate(trans)
+            page = compose_page(chunk_page_spec(doc_id, i, dv))
+            spans, layout = recognize_page(
+                page.image, 300, net=net, deva_split=True
+            )
+            return {
+                "doc_id": doc_id,
+                "offset": i,
+                "n_splits": layout.deva_splits,
+                "text": _text_of(spans),
+            }
+
+        return lambda chunks: [row(*c) for c in chunks if pure.fullmatch(c[2])]
+
+    return _ocr_chunks(
+        spark,
+        sf_dir,
+        9,
+        "doc_id long, offset int, n_splits long, text string",
+        make_rows,
     )
 
 
-ORACLE_DEVANAGARI_OCR = """
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS words FROM documents
-), c AS (
-  SELECT doc_id, CAST(g.i AS INT) AS "offset",
-         list_slice(words, g.i*12 + 1, g.i*12 + 12) AS cw
-  FROM w, LATERAL (
-    SELECT unnest(generate_series(0, CAST(ceil(len(words)/12.0) AS BIGINT) - 1)) AS i
-  ) g
-  WHERE doc_id % 9 = 0
-), m AS (
-  SELECT doc_id, "offset", cw
-  FROM c
-  WHERE "offset" % 3 <> 0
-    AND regexp_matches(array_to_string(cw, ' '), '^[a-z ]+$')
-), t AS (
+ORACLE_DEVANAGARI_OCR = f"""
+WITH {_ORACLE_CHUNKS}, t AS (
   SELECT doc_id, "offset",
          list_transform(cw,
            w -> translate(w, 'abcdefghijklmnopqrstuvwxyz',
                           'कखगघचछजझटठकखगघचछजझटठकखगघचछ')) AS cw
-  FROM m
+  FROM chunks
+  WHERE "offset" % 3 <> 0 AND doc_id % 9 = 0
+    AND regexp_matches(array_to_string(cw, ' '), '^[a-z ]+$')
 )
 SELECT doc_id, "offset",
   CAST(len(array_to_string(cw, '')) - len(cw) AS BIGINT) AS n_splits,
-  array_to_string(
-    list_transform(
-      generate_series(0, CAST(ceil(len(cw)/4.0) AS BIGINT) - 1),
-      j -> array_to_string(cw[j*4 + 1 : j*4 + 4], ' ')),
-    chr(10)) AS text
+  {_ORACLE_LINES} AS text
 FROM t
 """
 
@@ -709,65 +590,31 @@ def q_ocr_legacy_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     recognize_page_legacy; the oracle is the SAME chunk-text
     reconstruction the LSTM/template flagship must match — the
     BasicTesseractTest contract (unittest/baseapi_test.cc:72-89: the
-    legacy engine reads the same gold text).
+    legacy engine reads the same gold text)."""
 
-    Zero shuffles: one mapInPandas over chunk rows."""
-    import pandas as pd
-
-    from .derived import chunked
-
-    ch = chunked(spark, sf_dir).filter(
-        (F.col("kind") == "media") & (F.col("doc_id") % 13 == 0)
-    )
-
-    def udf(batches):
+    def make_rows():
         from .derived import chunk_page_spec
         from .functions.compose import compose_page
         from .operators.legacy import recognize_page_legacy
 
-        for pdf in batches:
-            rows = []
-            for doc_id, i, chunk in zip(
-                pdf["doc_id"], pdf["i"], pdf["chunk_text"]
-            ):
-                doc_id, i = int(doc_id), int(i)
-                page = compose_page(chunk_page_spec(doc_id, i, chunk))
-                spans, _l = recognize_page_legacy(page.image, 300)
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "offset": i,
-                        "text": "\n".join(
-                            t for k, t in spans if k == "text"
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "offset", "text"])
+        def row(doc_id, i, chunk):
+            page = compose_page(chunk_page_spec(doc_id, i, chunk))
+            spans, _l = recognize_page_legacy(page.image, 300)
+            text = "\n".join(t for k, t in spans if k == "text")
+            return {"doc_id": doc_id, "offset": i, "text": text}
 
-    return ch.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        udf, schema="doc_id long, offset int, text string"
+        return lambda chunks: [row(*c) for c in chunks]
+
+    return _ocr_chunks(
+        spark, sf_dir, 13, "doc_id long, offset int, text string", make_rows
     )
 
 
-ORACLE_OCR_LEGACY_EXTRACT = """
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS words FROM documents
-), c AS (
-  SELECT doc_id, CAST(g.i AS INT) AS "offset",
-         list_slice(words, g.i*12 + 1, g.i*12 + 12) AS cw
-  FROM w, LATERAL (
-    SELECT unnest(generate_series(0, CAST(ceil(len(words)/12.0) AS BIGINT) - 1)) AS i
-  ) g
-  WHERE doc_id % 13 = 0
-)
-SELECT doc_id, "offset",
-  array_to_string(
-    list_transform(
-      generate_series(0, CAST(ceil(len(cw)/4.0) AS BIGINT) - 1),
-      j -> array_to_string(cw[j*4 + 1 : j*4 + 4], ' ')),
-    chr(10)) AS text
-FROM c
-WHERE "offset" % 3 <> 0
+ORACLE_OCR_LEGACY_EXTRACT = f"""
+WITH {_ORACLE_CHUNKS}
+SELECT doc_id, "offset", {_ORACLE_LINES} AS text
+FROM chunks
+WHERE "offset" % 3 <> 0 AND doc_id % 13 = 0
 """
 
 
@@ -783,18 +630,9 @@ def q_ocr_combined_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     while the micro-feature classifier still reads it at ~0.97).  The
     oracle is the clean gold-text reconstruction: a green row proves
     the fallback rescues the damaged word EXACTLY, not merely that the
-    wrapper passes clean pages through.
+    wrapper passes clean pages through."""
 
-    Zero shuffles: one mapInPandas over chunk rows."""
-    import pandas as pd
-
-    from .derived import chunked
-
-    ch = chunked(spark, sf_dir).filter(
-        (F.col("kind") == "media") & (F.col("doc_id") % 17 == 0)
-    )
-
-    def udf(batches):
+    def make_rows():
         import numpy as np
 
         from .derived import chunk_page_spec
@@ -834,53 +672,27 @@ def q_ocr_combined_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
                 return mask_to_gray(out)
             return img
 
-        for pdf in batches:
-            rows = []
-            for doc_id, i, chunk in zip(
-                pdf["doc_id"], pdf["i"], pdf["chunk_text"]
-            ):
-                doc_id, i = int(doc_id), int(i)
-                spec = chunk_page_spec(doc_id, i, chunk)
-                page = compose_page(spec)
-                img = page.image
-                if spec.skew == 0.0 and "w" in chunk:
-                    img = damage_one_w(img, spec.scale)
-                spans, _l = recognize_page_combined(img, 300)
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "offset": i,
-                        "text": "\n".join(
-                            t for k, t in spans if k == "text"
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "offset", "text"])
+        def row(doc_id, i, chunk):
+            spec = chunk_page_spec(doc_id, i, chunk)
+            img = compose_page(spec).image
+            if spec.skew == 0.0 and "w" in chunk:
+                img = damage_one_w(img, spec.scale)
+            spans, _l = recognize_page_combined(img, 300)
+            text = "\n".join(t for k, t in spans if k == "text")
+            return {"doc_id": doc_id, "offset": i, "text": text}
 
-    return ch.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        udf, schema="doc_id long, offset int, text string"
+        return lambda chunks: [row(*c) for c in chunks]
+
+    return _ocr_chunks(
+        spark, sf_dir, 17, "doc_id long, offset int, text string", make_rows
     )
 
 
-ORACLE_OCR_COMBINED_EXTRACT = """
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS words FROM documents
-), c AS (
-  SELECT doc_id, CAST(g.i AS INT) AS "offset",
-         list_slice(words, g.i*12 + 1, g.i*12 + 12) AS cw
-  FROM w, LATERAL (
-    SELECT unnest(generate_series(0, CAST(ceil(len(words)/12.0) AS BIGINT) - 1)) AS i
-  ) g
-  WHERE doc_id % 17 = 0
-)
-SELECT doc_id, "offset",
-  array_to_string(
-    list_transform(
-      generate_series(0, CAST(ceil(len(cw)/4.0) AS BIGINT) - 1),
-      j -> array_to_string(cw[j*4 + 1 : j*4 + 4], ' ')),
-    chr(10)) AS text
-FROM c
-WHERE "offset" % 3 <> 0
+ORACLE_OCR_COMBINED_EXTRACT = f"""
+WITH {_ORACLE_CHUNKS}
+SELECT doc_id, "offset", {_ORACLE_LINES} AS text
+FROM chunks
+WHERE "offset" % 3 <> 0 AND doc_id % 17 = 0
 """
 
 
@@ -895,70 +707,47 @@ def q_ocr_symbol_choices(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank-1 choice (the network argmax at the symbol's emission timestep)
     and its alternative count.  The oracle reconstructs the expected
     symbol stream — the chunk's characters with spaces removed — so a
-    green row proves the per-symbol walk end-to-end.
+    green row proves the per-symbol walk end-to-end."""
 
-    Zero shuffles: one mapInPandas; each chunk row is independent."""
-    import pandas as pd
-
-    from .derived import chunked
-
-    ch = chunked(spark, sf_dir).filter(
-        (F.col("kind") == "media") & (F.col("doc_id") % 9 == 0)
-    )
-
-    def udf(batches):
+    def make_rows():
         from .derived import chunk_page_spec
         from .functions.compose import compose_page
         from .operators.recognize import recognize_page_detail
 
-        for pdf in batches:
-            rows = []
-            for doc_id, i, chunk in zip(
-                pdf["doc_id"], pdf["i"], pdf["chunk_text"]
-            ):
-                doc_id, i = int(doc_id), int(i)
-                page = compose_page(chunk_page_spec(doc_id, i, chunk))
-                _spans, words, _l = recognize_page_detail(
-                    page.image, 300, want_choices=True
-                )
-                si = 0
-                for w in words:
-                    for sym in w.choices:
-                        rows.append(
-                            {
-                                "doc_id": doc_id,
-                                "offset": i,
-                                "si": si,
-                                "ch": sym[0][0] if sym else "",
-                            }
-                        )
-                        si += 1
-            yield pd.DataFrame(rows, columns=["doc_id", "offset", "si", "ch"])
+        def rows(doc_id, i, chunk):
+            page = compose_page(chunk_page_spec(doc_id, i, chunk))
+            _spans, words, _l = recognize_page_detail(
+                page.image, 300, want_choices=True
+            )
+            syms = [sym for w in words for sym in w.choices]
+            return [
+                {
+                    "doc_id": doc_id,
+                    "offset": i,
+                    "si": si,
+                    "ch": sym[0][0] if sym else "",
+                }
+                for si, sym in enumerate(syms)
+            ]
 
-    return ch.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        udf, schema="doc_id long, offset int, si int, ch string"
+        return lambda chunks: [r for c in chunks for r in rows(*c)]
+
+    return _ocr_chunks(
+        spark, sf_dir, 9, "doc_id long, offset int, si int, ch string", make_rows
     )
 
 
-ORACLE_OCR_SYMBOL_CHOICES = """
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS words FROM documents
-), c AS (
-  SELECT doc_id, CAST(g.i AS INT) AS "offset",
-         replace(array_to_string(
-           list_slice(words, g.i*12 + 1, g.i*12 + 12), ' '), ' ', '') AS s
-  FROM w, LATERAL (
-    SELECT unnest(generate_series(0, CAST(ceil(len(words)/12.0) AS BIGINT) - 1)) AS i
-  ) g
-  WHERE doc_id % 9 = 0
+ORACLE_OCR_SYMBOL_CHOICES = f"""
+WITH {_ORACLE_CHUNKS}, c AS (
+  SELECT doc_id, "offset", array_to_string(cw, '') AS s
+  FROM chunks
+  WHERE "offset" % 3 <> 0 AND doc_id % 9 = 0
 )
 SELECT doc_id, "offset", CAST(p.j - 1 AS INT) AS si, substr(s, p.j, 1) AS ch
 FROM c, LATERAL (
   SELECT unnest(generate_series(1, CAST(len(s) AS BIGINT))) AS j
 ) p
-WHERE "offset" % 3 <> 0
 """
-
 
 
 def q_ocr_font_attrs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -973,18 +762,9 @@ def q_ocr_font_attrs(spark: SparkSession, sf_dir: str) -> DataFrame:
     recognize with font_attrs=True; each page emits one row per word in
     reading order carrying its decoded text and elected face.  The
     oracle recomputes both from the documents table, so a green row
-    proves decode + attribution jointly.
+    proves decode + attribution jointly."""
 
-    Zero shuffles: one mapInPandas; each chunk row is independent."""
-    import pandas as pd
-
-    from .derived import chunked
-
-    ch = chunked(spark, sf_dir).filter(
-        (F.col("kind") == "media") & (F.col("doc_id") % 9 == 0)
-    )
-
-    def udf(batches):
+    def make_rows():
         import numpy as np
 
         from .functions.fonts import (
@@ -1009,73 +789,61 @@ def q_ocr_font_attrs(spark: SparkSession, sf_dir: str) -> DataFrame:
                     cols.append(np.zeros((CELL_H, 1), dtype=bool))
             return np.hstack(cols)
 
-        for pdf in batches:
-            rows = []
-            for doc_id, i, chunk in zip(
-                pdf["doc_id"], pdf["i"], pdf["chunk_text"]
-            ):
-                doc_id, i = int(doc_id), int(i)
-                # empty words (double spaces in the source text) render
-                # nothing — drop them on BOTH sides (oracle: list_filter)
-                words = [w for w in chunk.split(" ") if w]
-                if not words:
-                    continue
-                # 4-word lines, each word in its cyclic face
-                lines = []
-                for j0 in range(0, len(words), 4):
-                    seg = []
-                    for j in range(j0, min(j0 + 4, len(words))):
-                        seg.append(word_mask(words[j], faces[j % 3]))
-                        if j + 1 < min(j0 + 4, len(words)):
-                            seg.append(
-                                np.zeros((CELL_H, WORD_GAP), dtype=bool)
-                            )
-                    lines.append(np.hstack(seg))
-                w = max(ln.shape[1] for ln in lines) + 24
-                h = CELL_H * len(lines) + 8 * (len(lines) - 1) + 24
-                page = np.zeros((h, w), dtype=bool)
-                y = 12
-                for ln in lines:
-                    page[y : y + CELL_H, 12 : 12 + ln.shape[1]] = ln
-                    y += CELL_H + 8
-                _s, wrecs, _l = recognize_page_detail(
-                    mask_to_gray(page), 300, net=net, font_attrs=True
-                )
-                wrecs.sort(
-                    key=lambda r: (
-                        r.block_num, r.par_num, r.line_num, r.word_num
-                    )
-                )
-                for wi, r in enumerate(wrecs):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "offset": i,
-                            "wi": wi,
-                            "word": r.text,
-                            "font": r.font,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "offset", "wi", "word", "font"]
+        def rows(doc_id, i, chunk):
+            # empty words (double spaces in the source text) render
+            # nothing — drop them on BOTH sides (oracle: list_filter)
+            words = [w for w in chunk.split(" ") if w]
+            if not words:
+                return []
+            # 4-word lines, each word in its cyclic face
+            lines = []
+            for j0 in range(0, len(words), 4):
+                seg = []
+                for j in range(j0, min(j0 + 4, len(words))):
+                    seg.append(word_mask(words[j], faces[j % 3]))
+                    if j + 1 < min(j0 + 4, len(words)):
+                        seg.append(np.zeros((CELL_H, WORD_GAP), dtype=bool))
+                lines.append(np.hstack(seg))
+            w = max(ln.shape[1] for ln in lines) + 24
+            h = CELL_H * len(lines) + 8 * (len(lines) - 1) + 24
+            page = np.zeros((h, w), dtype=bool)
+            y = 12
+            for ln in lines:
+                page[y : y + CELL_H, 12 : 12 + ln.shape[1]] = ln
+                y += CELL_H + 8
+            _s, wrecs, _l = recognize_page_detail(
+                mask_to_gray(page), 300, net=net, font_attrs=True
             )
+            wrecs.sort(
+                key=lambda r: (r.block_num, r.par_num, r.line_num, r.word_num)
+            )
+            return [
+                {
+                    "doc_id": doc_id,
+                    "offset": i,
+                    "wi": wi,
+                    "word": r.text,
+                    "font": r.font,
+                }
+                for wi, r in enumerate(wrecs)
+            ]
 
-    return ch.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        udf, schema="doc_id long, offset int, wi int, word string, font string"
+        return lambda chunks: [r for c in chunks for r in rows(*c)]
+
+    return _ocr_chunks(
+        spark,
+        sf_dir,
+        9,
+        "doc_id long, offset int, wi int, word string, font string",
+        make_rows,
     )
 
 
-ORACLE_OCR_FONT_ATTRS = """
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS words FROM documents
-), c AS (
-  SELECT doc_id, CAST(g.i AS INT) AS "offset",
-         list_filter(list_slice(words, g.i*12 + 1, g.i*12 + 12),
-                     x -> x <> '') AS cw
-  FROM w, LATERAL (
-    SELECT unnest(generate_series(0, CAST(ceil(len(words)/12.0) AS BIGINT) - 1)) AS i
-  ) g
-  WHERE doc_id % 9 = 0
+ORACLE_OCR_FONT_ATTRS = f"""
+WITH {_ORACLE_CHUNKS}, c AS (
+  SELECT doc_id, "offset", list_filter(cw, x -> x <> '') AS cw
+  FROM chunks
+  WHERE "offset" % 3 <> 0 AND doc_id % 9 = 0
 )
 SELECT doc_id, "offset", CAST(p.j - 1 AS INT) AS wi, cw[p.j] AS word,
   CASE (p.j - 1) % 3 WHEN 0 THEN 'normal' WHEN 1 THEN 'bold'
@@ -1083,7 +851,6 @@ SELECT doc_id, "offset", CAST(p.j - 1 AS INT) AS wi, cw[p.j] AS word,
 FROM c, LATERAL (
   SELECT unnest(generate_series(1, CAST(len(cw) AS BIGINT))) AS j
 ) p
-WHERE "offset" % 3 <> 0
 """
 
 
@@ -1132,18 +899,10 @@ def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DOC_QUALITY = """
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS words FROM documents
-), c AS (
-  SELECT doc_id, CAST(g.i AS INT) AS i,
-         array_to_string(list_slice(words, g.i*12 + 1, g.i*12 + 12), ' ') AS chunk
-  FROM w, LATERAL (
-    SELECT unnest(generate_series(0, CAST(ceil(len(words)/12.0) AS BIGINT) - 1)) AS i
-  ) g
-), media AS (
-  SELECT doc_id, length(replace(chunk, ' ', '')) AS chars
-  FROM c WHERE i % 3 <> 0
+ORACLE_DOC_QUALITY = f"""
+WITH {_ORACLE_CHUNKS}, media AS (
+  SELECT doc_id, length(array_to_string(cw, '')) AS chars
+  FROM chunks WHERE "offset" % 3 <> 0
 )
 SELECT doc_id, count(*) AS n_pages,
        CAST(sum(chars) AS BIGINT) AS char_count,
@@ -1982,7 +1741,7 @@ def q_charset_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CHARSET_EXTRACT = """
+ORACLE_CHARSET_EXTRACT = r"""
 WITH chars AS (
   SELECT unnest(regexp_extract_all(
     regexp_replace(regexp_replace(regexp_replace(regexp_replace(

@@ -148,7 +148,18 @@ def test_list_langs_and_print_parameters(capsys):
     out = capsys.readouterr().out
     assert "eng" in out and "heb" in out and "deva" in out and "equ" in out
     assert cli.run(["t", "--print-parameters"]) == 0
-    assert "tessedit_pageseg_mode" in capsys.readouterr().out
+    out = capsys.readouterr().out
+    assert "tessedit_pageseg_mode" in out
+    # only parameters the engine reads are advertised
+    for unread in (
+        "thresholding_method",
+        "thresholding_tile_size",
+        "thresholding_window_size",
+        "thresholding_kfactor",
+        "textord_max_noise_size",
+        "language_model_penalty_non_dict_word",
+    ):
+        assert unread not in out
 
 
 def test_unknown_lang_rejected(capsys, page_png, tmp_path):

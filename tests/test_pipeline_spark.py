@@ -162,6 +162,25 @@ def test_topk_queries_compile_to_take_ordered(spark):
         assert "TakeOrderedAndProject" in plan, name
 
 
+def test_chunk_ocr_queries_compile_to_one_round_robin_map(spark):
+    """Every chunk-OCR registry query is queries._ocr_chunks: one
+    round-robin exchange spreading the media chunks over the cores,
+    feeding one MapInPandas — zero shuffles besides it."""
+    from tesseract_spark.queries import REGISTRY
+
+    sf = "/root/testdata/sf0.001"
+    for name in ("ocr_vgsl_extract", "ocr_beam_extract", "line_removal",
+                 "underline_stats", "equation_regions", "multilang_retry",
+                 "devanagari_ocr", "ocr_legacy_extract",
+                 "ocr_combined_extract", "ocr_symbol_choices",
+                 "ocr_font_attrs"):
+        fn, _ = REGISTRY[name]
+        plan = fn(spark, sf)._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange RoundRobinPartitioning") == 1, name
+        assert plan.count("Exchange") == 1, name
+        assert plan.count("MapInPandas") == 1, name
+
+
 def test_no_single_partition_exchange_in_registry_lsh_queries(spark):
     """kNN/near-dup/multimodal queries must never funnel through an
     Exchange SinglePartition (per-query windows partition by vec_id)."""

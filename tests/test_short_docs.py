@@ -1,8 +1,9 @@
 """Degenerate-document regression: the text-quality registry queries
 must survive (and agree with their oracles on) documents shorter than
-the largest n-gram — empty, one-token, and nine-token docs.  The
-driver fixtures happen to contain none (minimum 10 tokens), so this is
-the 100 TB robustness case the fixtures never exercise."""
+the largest n-gram — empty, one-token, and nine-token docs — and on
+NULL text.  The driver fixtures happen to contain none (minimum 10
+tokens, no NULL), so this is the 100 TB robustness case the fixtures
+never exercise."""
 
 import duckdb
 import numpy as np
@@ -22,18 +23,20 @@ DOCS = [
         "length gate of seventy characters", "en", "web"),
     # dirty text: HTML-active chars, a copyright mark, doubled spaces
     (6, "a © b  <tag> & x", "en", "web"),
+    # NULL text chunks as '' (derived.chunked / queries._ORACLE_CHUNKS)
+    (7, None, "en", "web"),
 ]
 
 QUERIES = ["gopher_repetition", "seq_packing", "corpus_funnel",
            "justext_extract", "quality_score", "bpe_token_stats",
-           "c4_filters", "dehyphenate"]
+           "c4_filters", "dehyphenate", "ocr_extract"]
 
 
 @pytest.fixture(scope="module")
 def tiny_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("tinydocs")
     pdf = pd.DataFrame(DOCS, columns=["doc_id", "text", "lang", "source"])
-    pdf["n_chars"] = pdf["text"].str.len().astype("int64")
+    pdf["n_chars"] = pdf["text"].str.len().fillna(0).astype("int64")
     pdf = pdf[["doc_id", "text", "lang", "source", "n_chars"]]
     pdf.to_parquet(d / "documents.parquet", index=False)
     return str(d)
