@@ -1,7 +1,9 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may run on).
+Prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ..., "docs_per_sec": ...}
+   "queries": {name: sec, ...}, "sf": ..., "cpus": ..., "nproc": ...,
+   "docs_per_sec": ...}
 
 The flagship `ocr_extract` is the throughput workload (BASELINE.json
 metric: OCR'd documents/sec); the rest cover the operator families.
@@ -43,7 +45,11 @@ BENCH_QUERIES = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    nproc = len(os.sched_getaffinity(0))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or nproc)
+    # half the box's memory, 1-48 GB: the driver JVM is also the executor
+    ram_gb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**30
+    driver_gb = max(1, min(48, ram_gb // 2))
     from pyspark.sql import SparkSession
 
     spark = (
@@ -51,9 +57,10 @@ def main() -> None:
         .appName("tesseract_spark_bench")
         .config("spark.sql.shuffle.partitions", str(2 * cpus))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", f"{driver_gb}g")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -144,6 +151,7 @@ def main() -> None:
         "queries": timings,
         "sf": sf_dir.rstrip("/").rsplit("sf", 1)[-1],
         "cpus": cpus,
+        "nproc": nproc,
         "n_docs": n_docs,
         "docs_per_sec": round(n_docs / timings["ocr_extract"], 2),
         "rows": rows,

@@ -34,7 +34,7 @@ from __future__ import annotations
 
 import os
 import sys
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 
 from . import __version__
 
@@ -266,7 +266,13 @@ def parse_args(argv: list[str]) -> CliArgs | None:
 def resolve_params(a: CliArgs) -> dict[str, str]:
     """Config files first, then -c vars on top (main(),
     tesseract.cpp:757-764: Init reads configs, then SetVariable applies
-    each -c pair)."""
+    each -c pair).  A -c name the engine does not know (neither an
+    EngineConfig field nor in api.PARAM_DEFS) is reported on stderr and
+    skipped, and the run goes on, as the reference's failed SetVariable
+    does."""
+    from .api import PARAM_DEFS
+    from .config import EngineConfig
+
     params: dict[str, str] = {}
     for name in a.configs:
         cfg = CONFIGS.get(name)
@@ -274,7 +280,12 @@ def resolve_params(a: CliArgs) -> dict[str, str]:
             # unknown config: the reference fails inside Init; match it
             raise SystemExit(f"Error, unknown config file '{name}'")
         params.update(cfg)
-    params.update(a.vars)
+    known = {f.name for f in fields(EngineConfig)} | set(PARAM_DEFS)
+    for name, value in a.vars.items():
+        if name in known:
+            params[name] = value
+        else:
+            print(f"Could not set option: {name}={value}", file=sys.stderr)
     return params
 
 

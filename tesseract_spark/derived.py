@@ -20,12 +20,21 @@ Chunking rule (mirrored by the DuckDB CTE queries._ORACLE_CHUNKS):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .pipeline import quiet_spark_archives
+
+# the materialized corpora's default home: .bench_corpus in the checkout
+# that holds this package
+BENCH_CORPUS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".bench_corpus"
+)
 
 WORDS_PER_PARA = 12
 WORDS_PER_LINE = 4
@@ -107,6 +116,7 @@ def chunk_page_spec(doc_id: int, i: int, chunk: str):
 
 
 def _render_udf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    quiet_spark_archives()
     from .functions.compose import compose_page
     from .functions.png_codec import encode_gray_png
 
@@ -159,7 +169,7 @@ CORPUS_VERSION = "v1"  # bump when chunking/render rules change
 
 
 def materialize_corpus(
-    spark: SparkSession, sf_dir: str, cache_root: str = "/root/repo/.bench_corpus"
+    spark: SparkSession, sf_dir: str, cache_root: str = BENCH_CORPUS
 ) -> tuple[str, str]:
     """Write the derived interleaved corpus to parquet once (idempotent).
 
@@ -167,8 +177,6 @@ def materialize_corpus(
     flagship measures the PRODUCTION job — reading an existing corpus —
     rather than corpus synthesis.
     """
-    import os
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     base = f"{cache_root}/{CORPUS_VERSION}-{tag}"
     docs_path, media_path = f"{base}/documents", f"{base}/media"
@@ -247,15 +255,13 @@ def materialize_corpus_bucketed(
     spark: SparkSession,
     sf_dir: str,
     n_buckets: int = 128,
-    cache_root: str = "/root/repo/.bench_corpus",
+    cache_root: str = BENCH_CORPUS,
 ) -> tuple[str, str]:
     """Bucketed variant of materialize_corpus: the media table is written
     as a catalog table bucketed on media_ref, so the production join reads
     it shuffle-free (the png payload never moves; see
     pipeline.ocr_from_parts media_prebucketed).  Returns
     (documents_path, media_table_name)."""
-    import os
-
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
     docs_path, media_path = materialize_corpus(spark, sf_dir, cache_root)
     table = f"tess_media_bkt_{tag}_{n_buckets}"

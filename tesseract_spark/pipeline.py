@@ -18,10 +18,33 @@ Scale notes (100 TB / 1000 executors):
   aggregate into the lineage table (sources/lineage.py) for checkpoint
   resume — the reference's ETEXT_DESC progress/cancel analogue
   (include/tesseract/ocrclass.h, control.cpp:304-323).
+
+The Python task boundary has a fixed cost of its own, separate from the
+UDF body.  Before every task, PySpark's worker calls
+``importlib.invalidate_caches()`` (pyspark/worker_util.py
+setup_spark_files), and on CPython 3.11 every ``zipimporter`` then
+re-reads its archive's whole central directory.  A worker holds 16 of
+them: pyspark.zip and one per imported pyspark subpackage, the py4j zip
+and the 5,359-entry spark-core jar.  That is 160-230 ms per task, paid
+again by every task on a reused worker, against 3-5 ms for an empty task
+body.  ``quiet_spark_archives()`` runs first in each task body of this
+engine (the page UDF here, ``queries._ocr_chunks`` and
+``derived._render_udf``): it turns those importers' ``invalidate_caches``
+into a no-op for the rest of the worker's life, so only the first task a
+worker runs pays the re-read.  No output can change: Spark never rewrites
+pyspark.zip, py4j or its jars during a session, a new ``addPyFile`` zip
+arrives under a new path with a fresh importer, archives under the
+SparkFiles root keep full invalidation, and directory finders are left
+alone.  Measured on 4 vCPUs (BENCH.md): an empty ``mapInPandas`` task
+went from 309-375 to 86-151 core-ms, and perfbench's ``corpus_bucketed``
+from 30.8 to 61.0 docs/s (medians of ten interleaved pairs).
 """
 
 from __future__ import annotations
 
+import os
+import sys
+import zipimport
 from collections.abc import Iterator
 
 import pandas as pd
@@ -58,6 +81,28 @@ OCR_OUT_SCHEMA = T.StructType(
 DEFAULT_SALT = 16
 
 
+class _QuietZipImporter(zipimport.zipimporter):
+    """A zipimporter that keeps the archive directory it has read."""
+
+    def invalidate_caches(self) -> None:
+        pass
+
+
+def quiet_spark_archives() -> None:
+    """Stop the per-task re-read of Spark's own zip archives (module
+    docstring).  Call it first in a task body; a no-op outside a Spark
+    task, idempotent, and it lasts for the life of the worker process."""
+    from pyspark import SparkFiles, TaskContext
+
+    if TaskContext.get() is None:
+        return
+    user_files = os.path.join(SparkFiles.getRootDirectory(), "")
+    for importer in list(sys.path_importer_cache.values()):
+        plain = type(importer) is zipimport.zipimporter
+        if plain and not importer.archive.startswith(user_files):
+            importer.__class__ = _QuietZipImporter
+
+
 def _failed_row(doc_id, pos, ref, wall_ms: float, pid: int) -> dict:
     """The degraded media span of a page that produced no spans: empty
     text, n_chars = -1 as the failure marker for lineage/QA."""
@@ -91,6 +136,7 @@ def _make_ocr_udf(
     """
 
     def ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        quiet_spark_archives()
         import time
 
         from pyspark import TaskContext

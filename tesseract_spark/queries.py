@@ -22,6 +22,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .pipeline import quiet_spark_archives
+
 # --------------------------------------------------------------------------
 # OCR pipeline queries
 # --------------------------------------------------------------------------
@@ -75,6 +77,7 @@ def _ocr_chunks(
         keep = keep & (F.col("doc_id") % every == 0)
 
     def udf(batches):
+        quiet_spark_archives()
         rows_of = make_rows()
         for pdf in batches:
             chunks = [

@@ -162,6 +162,24 @@ def test_list_langs_and_print_parameters(capsys):
         assert unread not in out
 
 
+def test_unknown_c_param_warns_and_run_goes_on(capsys):
+    assert cli.run(["t", "--print-parameters"]) == 0
+    printed = [
+        line.split("\t")[0]
+        for line in capsys.readouterr().out.splitlines()[1:]
+    ]
+    assert printed
+    args = ["t", "i", "o", "-c", "no_such_param=1"]
+    args += ["-c", "tessedit_create_hocr=1"]  # a renderer switch
+    for name in printed:
+        args += ["-c", f"{name}=1"]
+    params = cli.resolve_params(cli.parse_args(args))
+    err = capsys.readouterr().err
+    assert err.splitlines() == ["Could not set option: no_such_param=1"]
+    assert "no_such_param" not in params
+    assert set(printed) <= set(params)
+
+
 def test_unknown_lang_rejected(capsys, page_png, tmp_path):
     rc = cli.run(["t", "-l", "xyz", page_png, str(tmp_path / "o")])
     assert rc == 1
