@@ -16,10 +16,12 @@ page rendered through the API equals the same page rendered by the
 distributed job.
 
 v1 routing notes (documented, warned where surprising):
+- GetUTF8Text's spans come from the page router
+  (operators.recognize.recognize, the one OEM x PSM x language
+  decision the CLI shares): OEM 0/1/2 select the legacy / VGSL /
+  combined engines, then the PSM selects the ProcessPage path;
 - word-level surfaces (iterators, hOCR/TSV/box getters) run the
-  default engine's AUTO layout; --psm affects GetUTF8Text via the
-  ProcessPage dispatch, and OEM 0/1/2 route GetUTF8Text through the
-  legacy / VGSL / combined engines.
+  default engine's AUTO layout.
 """
 
 from __future__ import annotations
@@ -29,13 +31,15 @@ import math
 import numpy as np
 
 from . import __version__
-from .config import PSM_AUTO, PSM_OSD_ONLY
-
-# OcrEngineMode (include/tesseract/publictypes.h:265-280)
-OEM_TESSERACT_ONLY = 0
-OEM_LSTM_ONLY = 1
-OEM_TESSERACT_LSTM_COMBINED = 2
-OEM_DEFAULT = 3
+from .config import (  # noqa: F401  (OcrEngineMode, re-exported)
+    OEM_DEFAULT,
+    OEM_LSTM_ONLY,
+    OEM_TESSERACT_LSTM_COMBINED,
+    OEM_TESSERACT_ONLY,
+    PSM_AUTO,
+    PSM_OSD_ONLY,
+    charlists_of,
+)
 
 # PageIteratorLevel (include/tesseract/publictypes.h:216-222)
 RIL_BLOCK = 0
@@ -460,80 +464,36 @@ class TessBaseAPI:
             img = img[t : t + h, l : l + w]
         return img
 
-    def _charlists(self):
-        bl = self._params["tessedit_char_blacklist"]
-        wl = self._params["tessedit_char_whitelist"]
-        ul = self._params["tessedit_char_unblacklist"]
-        return (bl, wl, ul) if (bl or wl or ul) else None
-
     def _dpi_now(self) -> int:
         return int(self._params["user_defined_dpi"]) or self._dpi
 
     # ---- recognition ----
 
     def Recognize(self, monitor=None) -> int:
-        """0 on success (baseapi.cpp:Recognize).  Spans honor the PSM
-        dispatch and OEM engine routing; the word-level surface runs
-        the default engine's AUTO path (v1 note in the module doc)."""
+        """0 on success (baseapi.cpp:Recognize).  Spans come from the
+        page router (operators.recognize.recognize: OEM engine, then the
+        PSM dispatch); the word-level surface runs the default engine's
+        AUTO path (v1 note in the module doc)."""
+        from .operators.multilang import page_packs
+        from .operators.recognize import recognize
+
         gray = self._page_image()
+        dpi = self._dpi_now()
         psm = self.GetPageSegMode()
-        charlists = self._charlists()
-        dawg = self._get_user_dawg()
-        if self._oem == OEM_TESSERACT_ONLY:
-            from .operators.legacy import recognize_page_legacy
-
-            spans, layout = recognize_page_legacy(
-                gray, self._dpi_now(), charlists=charlists, dawg=dawg)
-        elif self._oem == OEM_LSTM_ONLY:
-            from .operators.recognize import recognize_page_vgsl
-
-            spans, layout = recognize_page_vgsl(
-                gray, self._dpi_now(), charlists=charlists)
-        elif self._oem == OEM_TESSERACT_LSTM_COMBINED:
-            from .operators.legacy import recognize_page_combined
-
-            spans, layout = recognize_page_combined(
-                gray, self._dpi_now(), dawg=dawg, charlists=charlists)
-        else:
-            spans = layout = None  # resolved by the word pass below
-        # word surface (iterators + word-level renderers)
-        if psm != PSM_OSD_ONLY:
-            from .operators.recognize import recognize_page_detail
-
-            packs = None
-            if self._lang and self._lang not in ("eng", "osd"):
-                from .operators.multilang import get_lang_packs
-
-                packs = get_lang_packs(self._lang)
-            d_spans, words, d_layout = recognize_page_detail(
-                gray, self._dpi_now(), dawg=dawg, want_choices=True,
-                charlists=charlists, packs=packs,
-                font_attrs=bool(self._params["hocr_font_info"]),
-                monitor=monitor,
-                carry_adapted=self._adapted,  # AdaptToWordStr-taught
-            )
-            self._words = words
-            if spans is None:
-                # OEM_DEFAULT: the detail pass IS the engine for
-                # psm AUTO / non-eng languages; other PSMs dispatch
-                # through ProcessPage
-                if psm == PSM_AUTO or packs is not None:
-                    spans, layout = d_spans, d_layout
-                else:
-                    from .operators.recognize import process_page
-
-                    spans, layout = process_page(
-                        gray, self._dpi_now(), psm=psm, dawg=dawg,
-                        charlists=charlists)
-        else:
-            self._words = []
-            if spans is None:
-                from .operators.recognize import process_page
-
-                spans, layout = process_page(
-                    gray, self._dpi_now(), psm=psm, dawg=dawg,
-                    charlists=charlists)
-        self._spans, self._layout = spans, layout
+        route = dict(
+            dawg=self._get_user_dawg(), packs=page_packs(self._lang),
+            charlists=charlists_of(self._params), want_choices=True,
+            font_attrs=bool(self._params["hocr_font_info"]),
+            monitor=monitor,
+            carry_adapted=self._adapted,  # AdaptToWordStr-taught
+        )
+        spans, words, layout = recognize(
+            gray, dpi, oem=self._oem, psm=psm, **route)
+        if words is None:
+            # word surface (iterators + word-level renderers)
+            words = [] if psm == PSM_OSD_ONLY else recognize(
+                gray, dpi, oem=OEM_DEFAULT, psm=PSM_AUTO, **route)[1]
+        self._spans, self._words, self._layout = spans, words, layout
         return 0
 
     def _ensure(self):
@@ -541,12 +501,7 @@ class TessBaseAPI:
             self.Recognize()
 
     def _span_texts(self) -> list[str]:
-        out = []
-        for s in self._spans:
-            kind, text = (s.kind, s.text) if hasattr(s, "kind") else (s[0], s[1])
-            if kind in ("text", "osd"):
-                out.append(text)
-        return out
+        return [s.text for s in self._spans if s.kind in ("text", "osd")]
 
     # ---- text getters ----
 

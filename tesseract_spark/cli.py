@@ -37,6 +37,7 @@ import sys
 from dataclasses import dataclass, field, fields
 
 from . import __version__
+from .config import OEM_DEFAULT, PSM_AUTO, PSM_OSD_ONLY, charlists_of
 
 # stringToPSM (tesseract.cpp:330-363)
 PSM_MAP = {
@@ -108,8 +109,8 @@ class CliArgs:
     loglevel: str = ""
     user_words: str | None = None
     user_patterns: str | None = None
-    psm: int = 3  # PSM_AUTO
-    oem: int = 3  # OEM_DEFAULT
+    psm: int = PSM_AUTO
+    oem: int = OEM_DEFAULT
     list_langs: bool = False
     print_parameters: bool = False
     print_fonts_table: bool = False
@@ -250,7 +251,7 @@ def parse_args(argv: list[str]) -> CliArgs | None:
 
     a.configs = list(argv[i:])
 
-    if a.psm == 0:  # PSM_OSD_ONLY wants the osd language
+    if a.psm == PSM_OSD_ONLY:  # OSD-only wants the osd language
         if a.lang is not None and a.lang != "osd":
             print(f"Warning, detects only orientation with -l {a.lang}",
                   file=sys.stderr)
@@ -313,7 +314,7 @@ def select_renderers(params: dict[str, str], psm: int) -> list[str]:
     """PreloadRenderers: PSM_OSD_ONLY -> osd only; else the configured
     set, defaulting to txt when nothing else was requested
     (tesseract.cpp:623-635)."""
-    if psm == 0:
+    if psm == PSM_OSD_ONLY:
         return ["osd"]
     out = [name for key, name in _RENDERER_ORDER if _is_true(params.get(key, "0"))]
     if _is_true(params.get("tessedit_create_txt", "0")) or not out:
@@ -443,20 +444,35 @@ def _spans_schema():
     )
 
 
+def _media_pages(docs, media):
+    """One row per media span — (media_ref, doc_id, pos, png, dpi) — for
+    the per-page task bodies: the posexplode, media filter and media
+    join."""
+    from pyspark.sql import functions as F
+
+    return (
+        docs.select("doc_id", F.posexplode("spans").alias("pos", "span"))
+        .filter(F.col("span.kind") == "media")
+        .select("doc_id", "pos", F.col("span.media_ref").alias("media_ref"))
+        .join(media.select("media_ref", "png", "dpi"), "media_ref", "left")
+    )
+
+
 def _cli_spans(spark, docs, media, a: CliArgs, charlists, dict_words,
                dict_patterns):
     """Span-level extraction routed by --psm/--oem/-l.
 
     The default oem 3 + psm AUTO + single-language case delegates to
     the flagship ``ocr_documents`` (the optimized salted-shuffle path);
-    anything else runs a page-per-row mapInPandas calling the requested
-    engine — still fully distributed, one task per media batch."""
+    anything else runs a page-per-row mapInPandas calling the page
+    router (operators.recognize.recognize) — still fully distributed,
+    one task per media batch."""
     import pandas as pd
 
     from .pipeline import ocr_documents
 
     lang = a.lang or "eng"
-    if a.oem == 3 and a.psm == 3 and lang in ("eng", None):
+    if a.oem == OEM_DEFAULT and a.psm == PSM_AUTO and lang == "eng":
         flat = ocr_documents(
             spark, docs, media, dict_words=dict_words,
             dict_patterns=dict_patterns, charlists=charlists,
@@ -464,28 +480,17 @@ def _cli_spans(spark, docs, media, a: CliArgs, charlists, dict_words,
         return flat.select("doc_id", "offset", "kind", "text", "media_ref")
 
     oem, psm, dpi_override = a.oem, a.psm, a.dpi
-    uw = tuple(dict_words) if dict_words else None
-
-    from pyspark.sql import functions as F
-
-    pages = (
-        docs.select("doc_id", F.posexplode("spans").alias("pos", "span"))
-        .filter(F.col("span.kind") == "media")
-        .select("doc_id", "pos", F.col("span.media_ref").alias("media_ref"))
-        .join(media.select("media_ref", "png", "dpi"), "media_ref", "left")
-    )
+    uw = list(dict_words) if dict_words else None
 
     def udf(batches):
         from .functions.image_codecs import decode_gray_pages
         from .lstm.dawg import Dawg
         from .lstm.templates import get_net
+        from .operators.multilang import page_packs
+        from .operators.recognize import recognize
 
-        dawg = Dawg(get_net().charset, list(uw)) if uw else None
-        packs = None
-        if oem == 3 and lang != "eng":
-            from .operators.multilang import get_lang_packs
-
-            packs = get_lang_packs(lang, dict_words=list(uw) if uw else None)
+        dawg = Dawg(get_net().charset, uw) if uw else None
+        packs = page_packs(lang, dict_words=uw)
         for pdf_b in batches:
             rows = []
             for doc_id, pos, ref, png, dpi in zip(
@@ -497,49 +502,21 @@ def _cli_spans(spark, docs, media, a: CliArgs, charlists, dict_words,
                 # content autodetect + multipage container iteration
                 # (baseapi.cpp:1033-1194, :958-998): every page of the
                 # media blob contributes spans in container order
-                grays = decode_gray_pages(bytes(png))
                 use_dpi = dpi_override or int(dpi)
-                spans = []
-                for gray in grays:
-                    if oem == 0:
-                        from .operators.legacy import recognize_page_legacy
-
-                        sp, _ = recognize_page_legacy(
-                            gray, use_dpi, charlists=charlists, dawg=dawg)
-                    elif oem == 1:
-                        from .operators.recognize import recognize_page_vgsl
-
-                        sp, _ = recognize_page_vgsl(
-                            gray, use_dpi, charlists=charlists)
-                    elif oem == 2:
-                        from .operators.legacy import recognize_page_combined
-
-                        sp, _ = recognize_page_combined(
-                            gray, use_dpi, dawg=dawg, charlists=charlists)
-                    elif packs is not None:
-                        from .operators.recognize import recognize_page_detail
-
-                        sp, _w, _l = recognize_page_detail(
-                            gray, use_dpi, packs=packs, charlists=charlists)
-                    else:
-                        from .operators.recognize import process_page
-
-                        sp, _ = process_page(
-                            gray, use_dpi, psm=psm, dawg=dawg,
-                            charlists=charlists)
-                    spans.extend(sp)
+                spans = [
+                    s
+                    for gray in decode_gray_pages(bytes(png))
+                    for s in recognize(
+                        gray, use_dpi, oem=oem, psm=psm, dawg=dawg,
+                        packs=packs, charlists=charlists)[0]
+                ]
                 for k, s in enumerate(spans):
-                    # SubSpan objects (template/VGSL paths) or plain
-                    # (kind, text) tuples (the legacy/combined paths)
-                    kind, text = (
-                        (s.kind, s.text) if hasattr(s, "kind") else (s[0], s[1])
-                    )
                     rows.append(
                         {
                             "doc_id": doc_id,
                             "offset": int(pos) * 10_000 + k,
-                            "kind": kind,
-                            "text": text,
+                            "kind": s.kind,
+                            "text": s.text,
                             "media_ref": ref,
                         }
                     )
@@ -547,7 +524,7 @@ def _cli_spans(spark, docs, media, a: CliArgs, charlists, dict_words,
                 rows, columns=["doc_id", "offset", "kind", "text",
                                "media_ref"])
 
-    return pages.mapInPandas(udf, schema=_spans_schema())
+    return _media_pages(docs, media).mapInPandas(udf, schema=_spans_schema())
 
 
 def _render_outputs(
@@ -589,7 +566,8 @@ def _render_outputs(
     word_renderers = [r for r in renderers if r not in ("txt", "osd")]
     words = None
     if word_renderers:
-        if a.psm != 3 or a.oem != 3 or (a.lang or "eng") != "eng":
+        if (a.psm != PSM_AUTO or a.oem != OEM_DEFAULT
+                or (a.lang or "eng") != "eng"):
             print(
                 "Warning, word-level renderers run the default engine at "
                 "PSM_AUTO in this build",
@@ -737,12 +715,7 @@ def run(argv: list[str], spark=None) -> int:
     params = resolve_params(a)
     renderers = select_renderers(params, a.psm)
 
-    charlists = None
-    bl = params.get("tessedit_char_blacklist", "")
-    wl = params.get("tessedit_char_whitelist", "")
-    ul = params.get("tessedit_char_unblacklist", "")
-    if bl or wl or ul:
-        charlists = (bl, wl, ul)
+    charlists = charlists_of(params)
     dict_words = _read_wordfile(a.user_words) if a.user_words else None
     dict_patterns = (
         _read_wordfile(a.user_patterns) if a.user_patterns else None
@@ -801,7 +774,7 @@ def run(argv: list[str], spark=None) -> int:
 
             media = media.withColumn("dpi", F.lit(int(a.dpi)))
 
-        if a.psm == 0:
+        if a.psm == PSM_OSD_ONLY:
             spans = _osd_spans(spark, docs, media)
         else:
             spans = _cli_spans(
@@ -826,19 +799,12 @@ def run(argv: list[str], spark=None) -> int:
 
 def _osd_spans(spark, docs, media):
     """PSM_OSD_ONLY: one kind='osd' span per page holding the GetOsdText
-    report (TessOsdRenderer, renderer.cpp:229-247)."""
+    report (TessOsdRenderer, renderer.cpp:229-247); every page of a
+    multipage container reports, offset as on the span path."""
     import pandas as pd
-    from pyspark.sql import functions as F
-
-    pages = (
-        docs.select("doc_id", F.posexplode("spans").alias("pos", "span"))
-        .filter(F.col("span.kind") == "media")
-        .select("doc_id", "pos", F.col("span.media_ref").alias("media_ref"))
-        .join(media.select("media_ref", "png"), "media_ref", "left")
-    )
 
     def udf(batches):
-        from .functions.image_codecs import decode_gray_image
+        from .functions.image_codecs import decode_gray_pages
         from .operators.osd import get_osd_text
 
         for b in batches:
@@ -848,21 +814,22 @@ def _osd_spans(spark, docs, media):
             ):
                 if png is None:
                     continue
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "offset": int(pos),
-                        "kind": "osd",
-                        "text": get_osd_text(
-                            decode_gray_image(bytes(png)), page_number=int(pos)),
-                        "media_ref": ref,
-                    }
-                )
+                for k, gray in enumerate(decode_gray_pages(bytes(png))):
+                    rows.append(
+                        {
+                            "doc_id": doc_id,
+                            "offset": int(pos) * 10_000 + k,
+                            "kind": "osd",
+                            "text": get_osd_text(
+                                gray, page_number=int(pos) + k),
+                            "media_ref": ref,
+                        }
+                    )
             yield pd.DataFrame(
                 rows, columns=["doc_id", "offset", "kind", "text",
                                "media_ref"])
 
-    return pages.mapInPandas(udf, schema=_spans_schema())
+    return _media_pages(docs, media).mapInPandas(udf, schema=_spans_schema())
 
 
 def main(argv: list[str] | None = None) -> int:

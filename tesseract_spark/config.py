@@ -28,6 +28,12 @@ PSM_CIRCLE_WORD = 9
 PSM_SPARSE_TEXT = 11
 PSM_RAW_LINE = 13
 
+# OcrEngineMode (include/tesseract/publictypes.h:265-280)
+OEM_TESSERACT_ONLY = 0
+OEM_LSTM_ONLY = 1
+OEM_TESSERACT_LSTM_COMBINED = 2
+OEM_DEFAULT = 3
+
 
 def clamp_dpi(dpi: int | None) -> int:
     """Clamp a claimed resolution to the credible range
@@ -56,19 +62,18 @@ class EngineConfig:
         return clamp_dpi(row_dpi)
 
     def charlists(self) -> tuple[str, str, str] | None:
-        """The (blacklist, whitelist, unblacklist) triple, or None when
-        no restriction is configured (the all-enabled fast path)."""
-        if (
-            self.tessedit_char_whitelist
-            or self.tessedit_char_blacklist
-            or self.tessedit_char_unblacklist
-        ):
-            return (
-                self.tessedit_char_blacklist,
-                self.tessedit_char_whitelist,
-                self.tessedit_char_unblacklist,
-            )
-        return None
+        return charlists_of(vars(self))
+
+
+def charlists_of(params) -> tuple[str, str, str] | None:
+    """The (blacklist, whitelist, unblacklist) triple of a mapping of
+    ``tessedit_char_*`` params, or None when no restriction is
+    configured (the all-enabled fast path)."""
+    triple = tuple(
+        params.get(f"tessedit_char_{k}", "")
+        for k in ("blacklist", "whitelist", "unblacklist")
+    )
+    return triple if any(triple) else None
 
 
 def charlist_disabled(

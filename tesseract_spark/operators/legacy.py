@@ -278,14 +278,15 @@ def recognize_page_legacy(
 ):
     """recognize_page on the legacy engine: same layout stage, every row
     decoded by the static shape classifier (the OEM_TESSERACT_ONLY
-    switch).  Returns ordered (kind, text) span tuples like the other
-    engines' walks.
+    switch).  Returns (reading-ordered SubSpans, layout) like the other
+    engines.
 
     ``charlists``: (blacklist, whitelist, unblacklist) — the black and
     white lists apply to all loaded classifiers
     (SetBlackAndWhitelist, tesseractclass.cpp:531-553)."""
     from ..config import charlist_disabled
     from .page import analyze_page
+    from .recognize import assemble_row_spans
 
     clf = get_static_classifier()
     disabled = (
@@ -302,16 +303,12 @@ def recognize_page_legacy(
     )
     cache: dict = {}
     layout = analyze_page(gray, dpi)
-    multi_col = sum(1 for g in layout.regions if g.kind == "text") > 1
-    keyed: list[tuple[tuple, tuple[str, str]]] = []
+    decoded: dict[tuple[int, int], str] = {}
     for ri, region in enumerate(layout.regions):
         if region.kind != "text":
-            y = region.bbox[1]
-            key = (1, 0, y) if multi_col else (y, 1, 0)
-            keyed.append((key, ("media", "")))
             continue
-        texts = [
-            decode_strip_legacy(
+        for i, row in enumerate(region.rows):
+            t = decode_strip_legacy(
                 row.strip,
                 max(2, row.space_px // max(1, row.scale) - 1),
                 clf,
@@ -322,24 +319,16 @@ def recognize_page_legacy(
                 user_dawg=user_dawg,
                 freq_words=freq_words,
             )
-            for row in region.rows
-        ]
-        # contextual 0<->O repair — the legacy engine's
-        # make_reject_map entry step (flip_0O, reject.cpp:96-97,658):
-        # strips are x-height-normalized upstream so the BLN
-        # sub/superscript guard is owned by the superscript pass
-        texts = [
-            " ".join(flip_0O(w, enabled=flip_set) for w in t.split(" "))
-            if t
-            else t
-            for t in texts
-        ]
-        for group in region.paragraphs:
-            para_y = region.rows[group[0]].bbox[1]
-            key = (0, ri, para_y) if multi_col else (para_y, 0, 0)
-            keyed.append((key, ("text", "\n".join(texts[i] for i in group))))
-    keyed.sort(key=lambda kv: kv[0])
-    return [s for _k, s in keyed], layout
+            # contextual 0<->O repair — the legacy engine's
+            # make_reject_map entry step (flip_0O, reject.cpp:96-97,658):
+            # strips are x-height-normalized upstream so the BLN
+            # sub/superscript guard is owned by the superscript pass
+            decoded[(ri, i)] = (
+                " ".join(flip_0O(w, enabled=flip_set) for w in t.split(" "))
+                if t
+                else t
+            )
+    return assemble_row_spans(layout, decoded), layout
 
 
 def recognize_page_combined(
@@ -356,12 +345,12 @@ def recognize_page_combined(
     read cleanly are never touched (the reference only re-runs failed
     or odd-size words through ``match_word_pass_n``).
 
-    Returns ordered (kind, text) span tuples + layout, like
+    Returns (reading-ordered SubSpans, layout), like
     recognize_page_legacy."""
     from ..config import charlist_disabled
     from ..lstm.templates import get_net
     from .page import analyze_page
-    from .recognize import _decode_row
+    from .recognize import _decode_row, assemble_row_spans
 
     net = get_net()
     clf = get_static_classifier()
@@ -377,20 +366,15 @@ def recognize_page_combined(
     )
     cache: dict = {}
     layout = analyze_page(gray, dpi)
-    multi_col = sum(1 for g in layout.regions if g.kind == "text") > 1
-    keyed: list[tuple[tuple, tuple[str, str]]] = []
+    decoded: dict[tuple[int, int], str] = {}
     for ri, region in enumerate(layout.regions):
         if region.kind != "text":
-            y = region.bbox[1]
-            key = (1, 0, y) if multi_col else (y, 1, 0)
-            keyed.append((key, ("media", "")))
             continue
-        texts: list[str] = []
-        for row in region.rows:
+        for i, row in enumerate(region.rows):
             res = _decode_row(net, row, dawg, disabled=net_disabled)
             text, words, _m, dropped, cols, strip = res
             if len(dropped) == 0:
-                texts.append(text)
+                decoded[(ri, i)] = text
                 continue
             # word windows over the strip: ink runs separated by a
             # definite space gap (the same segmentation forward() uses
@@ -399,7 +383,7 @@ def recognize_page_combined(
             col_ink = strip.any(axis=0)
             ink_idx = np.flatnonzero(col_ink)
             if ink_idx.size == 0:
-                texts.append(text)
+                decoded[(ri, i)] = text
                 continue
             gaps = np.flatnonzero(np.diff(ink_idx) - 1 >= space_canon)
             win_edges = (
@@ -436,10 +420,5 @@ def recognize_page_combined(
                         out_words.append(leg)
                         continue
                 out_words.extend(win_words[wi])
-            texts.append(" ".join(t for t in out_words if t))
-        for group in region.paragraphs:
-            para_y = region.rows[group[0]].bbox[1]
-            key = (0, ri, para_y) if multi_col else (para_y, 0, 0)
-            keyed.append((key, ("text", "\n".join(texts[i] for i in group))))
-    keyed.sort(key=lambda kv: kv[0])
-    return [s for _k, s in keyed], layout
+            decoded[(ri, i)] = " ".join(t for t in out_words if t)
+    return assemble_row_spans(layout, decoded), layout

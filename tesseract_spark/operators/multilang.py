@@ -106,6 +106,20 @@ def get_lang_packs(
     return packs
 
 
+def page_packs(
+    lang: str | None, dict_words: list[str] | None = None
+) -> list[LangPack] | None:
+    """The language packs a page surface hands the page router
+    (operators.recognize.recognize): None for English alone — the
+    default engine's single-language path — else get_lang_packs.  An
+    'osd' part names the orientation model, not a recognition
+    language, and loads no pack."""
+    names = [n for n in (lang or "eng").split("+") if n != "osd"]
+    if names in ([], ["eng"]):
+        return None
+    return get_lang_packs("+".join(names), dict_words=dict_words)
+
+
 def word_rating(w) -> float:
     """Rating analogue (lower is better): the reference sums per-char
     ratings over the word (WERD_CHOICE::rating); here each char costs its

@@ -8,6 +8,10 @@ reading order, and interleave media sub-spans.  Mirrors
 (``LSTMRecognizeWord`` src/ccmain/linerec.cpp:229-258) plus the output walk
 (``GetUTF8Text`` src/api/baseapi.cpp:1307-1337): lines within a paragraph
 join with \\n, spans emit one per paragraph / media region.
+
+``recognize`` is the one page router over engine mode x PSM x language;
+every engine it reaches returns ``list[SubSpan]`` in the reading order
+of ``span_order_key``.
 """
 
 from __future__ import annotations
@@ -420,34 +424,60 @@ def process_page(
     return spans, layout
 
 
-def recognize_page_vgsl(
-    gray: np.ndarray, dpi: int = 300, model=None,
+def recognize(
+    gray: np.ndarray,
+    dpi: int = 300,
+    *,
+    oem: int,
+    psm: int,
+    dawg: Dawg | None = None,
+    packs=None,
     charlists: tuple[str, str, str] | None = None,
-    dawg=None, use_beam: bool = False,
-) -> tuple[list[SubSpan], PageResult]:
-    """recognize_page on the VGSL engine: same layout stage, but every row
-    strip is decoded by the tessdata-loaded VGSL conv stack (batched
-    width-bucketed forward + greedy CTC + recoder) instead of the
-    template bank — the OEM_LSTM_ONLY switch of the reference
-    (LSTMRecognizer::RecognizeLine, src/lstm/lstmrecognizer.cpp:247-291).
+    **detail,
+) -> tuple[list[SubSpan], "list[WordRec] | None", "PageResult | None"]:
+    """The page router: engine mode x page-segmentation mode x language
+    -> one recognition path (TessBaseAPI::Recognize -> ProcessPage,
+    src/api/baseapi.cpp).  The first rule that matches wins:
 
-    Baseline-ambiguous rows decode both hypotheses (alt_strip) and keep
-    whichever explains more characters, as the template path does.
+    1. OEM 0, 1, 2: the legacy, VGSL and combined engines.  The VGSL
+       engine never takes ``dawg`` — a dictionary would switch it from
+       greedy CTC to the lattice beam.
+    2. PSM_OSD_ONLY: process_page (the OSD report span).
+    3. language ``packs``: recognize_page_detail's multi-language retry.
+    4. PSM_AUTO: recognize_page_detail.
+    5. any other PSM: process_page.
 
-    ``use_beam`` routes every strip through the full lattice beam
-    (RecodeBeamSearch, lstm/recode_beam.py) instead of greedy CTC;
-    ``dawg`` adds the dictionary dual-beam rescoring of the reference's
-    LSTM path (recodebeam.cpp:1009-1134) and implies the beam."""
-    from ..lstm.fixture_model import (
-        beam_decode_strips,
-        decode_strips,
-        get_vgsl_model,
+    ``detail`` holds extra recognize_page_detail keywords (want_choices,
+    font_attrs, monitor, carry_adapted) for routes 3 and 4, the only
+    routes that return word records; the others return None for them."""
+    from ..config import (
+        OEM_LSTM_ONLY,
+        OEM_TESSERACT_LSTM_COMBINED,
+        OEM_TESSERACT_ONLY,
+        PSM_AUTO,
+        PSM_OSD_ONLY,
     )
 
-    return recognize_pages_vgsl(
-        [gray], dpi, model=model, charlists=charlists, dawg=dawg,
-        use_beam=use_beam,
-    )[0]
+    if oem == OEM_TESSERACT_ONLY:
+        from .legacy import recognize_page_legacy
+
+        spans, layout = recognize_page_legacy(
+            gray, dpi, charlists=charlists, dawg=dawg)
+    elif oem == OEM_LSTM_ONLY:
+        spans, layout = recognize_pages_vgsl(
+            [gray], dpi, charlists=charlists)[0]
+    elif oem == OEM_TESSERACT_LSTM_COMBINED:
+        from .legacy import recognize_page_combined
+
+        spans, layout = recognize_page_combined(
+            gray, dpi, dawg=dawg, charlists=charlists)
+    elif psm == PSM_OSD_ONLY or (packs is None and psm != PSM_AUTO):
+        spans, layout = process_page(
+            gray, dpi, psm=psm, dawg=dawg, charlists=charlists)
+    else:
+        return recognize_page_detail(
+            gray, dpi, dawg, packs=packs, charlists=charlists, **detail)
+    return spans, None, layout
 
 
 def recognize_pages_vgsl(
@@ -455,13 +485,27 @@ def recognize_pages_vgsl(
     charlists: tuple[str, str, str] | None = None,
     dawg=None, use_beam: bool = False,
 ) -> list[tuple[list[SubSpan], PageResult]]:
-    """recognize_page_vgsl over MANY pages with one cross-page decode:
-    every page's row strips (and alt hypotheses) pool into a single
+    """recognize_page on the VGSL engine, over MANY pages: same layout
+    stage, but every row strip is decoded by the tessdata-loaded VGSL
+    conv stack (batched width-bucketed forward + greedy CTC + recoder)
+    instead of the template bank — the OEM_LSTM_ONLY switch of the
+    reference (LSTMRecognizer::RecognizeLine,
+    src/lstm/lstmrecognizer.cpp:247-291).  One page is
+    ``recognize_pages_vgsl([gray])[0]``.
+
+    Every page's row strips (and alt hypotheses) pool into a single
     width-bucketed LSTM forward, so the conv/LSTM BLAS batches span page
     boundaries — the StrideMap fills with the whole task's lines, not one
     page's (stridemap.cpp batches whatever the caller queues).  Values
     are identical to per-page calls: bucketing is per-strip and the
-    decode of one strip never sees another."""
+    decode of one strip never sees another.  Baseline-ambiguous rows
+    decode both hypotheses (alt_strip) and keep whichever explains more
+    characters, as the template path does.
+
+    ``use_beam`` routes every strip through the full lattice beam
+    (RecodeBeamSearch, lstm/recode_beam.py) instead of greedy CTC;
+    ``dawg`` adds the dictionary dual-beam rescoring of the reference's
+    LSTM path (recodebeam.cpp:1009-1134) and implies the beam."""
     from ..lstm.fixture_model import (
         beam_decode_strips,
         decode_strips,
@@ -505,7 +549,7 @@ def recognize_pages_vgsl(
             decoded[(pi, ri, i)] = text
     return [
         (
-            _assemble_vgsl_spans(
+            assemble_row_spans(
                 layout,
                 {
                     (ri, i): t
@@ -519,27 +563,45 @@ def recognize_pages_vgsl(
     ]
 
 
-def _assemble_vgsl_spans(
+def span_order_key(layout: PageResult):
+    """The span reading order of a page, as a sort-key function
+    ``key(region_index, top_y, media=False)``: single-column pages
+    interleave paragraphs and media strictly by top y; multi-column
+    pages emit column text blocks left-to-right, media after
+    (layout_test.cc block-order semantics)."""
+    multi_col = sum(1 for g in layout.regions if g.kind == "text") > 1
+
+    def key(ri: int, y: int, media: bool = False) -> tuple:
+        if multi_col:
+            return (1, 0, y) if media else (0, ri, y)
+        return (y, 1, 0) if media else (y, 0, 0)
+
+    return key
+
+
+def assemble_row_spans(
     layout: PageResult, decoded: dict[tuple[int, int], str]
 ) -> list[SubSpan]:
-    """Reading-order span assembly for the VGSL path (shared by the
-    single-page and cross-page-batched entry points)."""
-    multi_col = sum(1 for g in layout.regions if g.kind == "text") > 1
+    """Reading-order spans from per-row texts ``{(region, row): text}``:
+    one span per paragraph (its rows joined with \\n) and one per media
+    region — the assembly of the VGSL, legacy and combined engines.
+    recognize_page_detail keeps its richer walk (equations, bidi, the
+    empty-paragraph skip) over the same reading order."""
+    key = span_order_key(layout)
     keyed: list[tuple[tuple, SubSpan]] = []
     for ri, region in enumerate(layout.regions):
         if region.kind != "text":
-            y = region.bbox[1]
-            key = (1, 0, y) if multi_col else (y, 1, 0)
-            keyed.append((key, SubSpan("media", "", 0.0, 0, 0)))
+            keyed.append(
+                (key(ri, region.bbox[1], media=True),
+                 SubSpan("media", "", 0.0, 0, 0))
+            )
             continue
         for group in region.paragraphs:
             texts_g = [decoded.get((ri, i), "") for i in group]
-            para_y = region.rows[group[0]].bbox[1]
-            key = (0, ri, para_y) if multi_col else (para_y, 0, 0)
             n_words = sum(len(t.split()) for t in texts_g if t)
             keyed.append(
                 (
-                    key,
+                    key(ri, region.rows[group[0]].bbox[1]),
                     SubSpan(
                         "text",
                         "\n".join(texts_g),
@@ -752,17 +814,15 @@ def recognize_page_detail(
                 )
                 w.mono_face = mono
     # ---- assembly (resultiterator walk) ----------------------------------
-    # span reading order: single-column pages interleave paragraphs and
-    # media strictly by top y; multi-column pages emit column text blocks
-    # left-to-right, media after (layout_test.cc block-order semantics).
-    multi_col = sum(1 for g in layout.regions if g.kind == "text") > 1
+    key_of = span_order_key(layout)
     keyed: list[tuple[tuple, SubSpan]] = []
     word_recs: list[WordRec] = []
     for ri, region in enumerate(layout.regions):
         if region.kind != "text":
-            y = region.bbox[1]
-            key = (1, 0, y) if multi_col else (y, 1, 0)
-            keyed.append((key, SubSpan("media", "", 0.0, 0, 0)))
+            keyed.append(
+                (key_of(ri, region.bbox[1], media=True),
+                 SubSpan("media", "", 0.0, 0, 0))
+            )
             continue
         row_texts: list[str] = []
         row_confs: list[float] = []
@@ -841,8 +901,7 @@ def recognize_page_detail(
                     )
             texts = [row_texts[i] for i in group]
             confs = [row_confs[i] for i in group if row_words[i] > 0]
-            para_y = region.rows[group[0]].bbox[1]
-            key = (0, ri, para_y) if multi_col else (para_y, 0, 0)
+            key = key_of(ri, region.rows[group[0]].bbox[1])
             para_text = "\n".join(texts)
             # PT_EQUATION taxonomy (publictypes.h:51-67): a math-dense
             # isolated paragraph emits an equation span

@@ -263,7 +263,8 @@ def ocr_documents(
     """documents(doc_id, spans) + media(media_ref, png, dpi) -> flat spans.
 
     Returns (doc_id, offset, kind, text, media_ref, confidence, n_lines,
-    n_words, wall_ms, partition_id) in reading order per document.
+    n_words, n_chars, wall_ms, partition_id) in reading order per
+    document.
     """
     exploded = docs.select(
         "doc_id", F.posexplode("spans").alias("pos", "span")

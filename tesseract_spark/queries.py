@@ -603,8 +603,7 @@ def q_ocr_legacy_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         def row(doc_id, i, chunk):
             page = compose_page(chunk_page_spec(doc_id, i, chunk))
             spans, _l = recognize_page_legacy(page.image, 300)
-            text = "\n".join(t for k, t in spans if k == "text")
-            return {"doc_id": doc_id, "offset": i, "text": text}
+            return {"doc_id": doc_id, "offset": i, "text": _text_of(spans)}
 
         return lambda chunks: [row(*c) for c in chunks]
 
@@ -681,8 +680,7 @@ def q_ocr_combined_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             if spec.skew == 0.0 and "w" in chunk:
                 img = damage_one_w(img, spec.scale)
             spans, _l = recognize_page_combined(img, 300)
-            text = "\n".join(t for k, t in spans if k == "text")
-            return {"doc_id": doc_id, "offset": i, "text": text}
+            return {"doc_id": doc_id, "offset": i, "text": _text_of(spans)}
 
         return lambda chunks: [row(*c) for c in chunks]
 

@@ -140,9 +140,9 @@ def test_whitelist_keeps_word_spacing():
 def test_legacy_blacklist_never_emitted():
     gray = _page([_line("hello")])
     spans, _ = recognize_page_legacy(gray)
-    assert [t for k, t in spans if k == "text"] == ["hello"]
+    assert [s.text for s in spans if s.kind == "text"] == ["hello"]
     spans, _ = recognize_page_legacy(gray, charlists=("l", "", ""))
-    out = [t for k, t in spans if k == "text"]
+    out = [s.text for s in spans if s.kind == "text"]
     assert out and all("l" not in t for t in out)
 
 
@@ -203,15 +203,17 @@ def test_vgsl_engine_honors_charlists():
     # (tesseractclass.cpp:538-541); greedy drops disabled emissions
     # (recodebeam.cpp:959 get_enabled skip)
     from tesseract_spark.functions.fonts import render_line
-    from tesseract_spark.operators.recognize import recognize_page_vgsl
+    from tesseract_spark.operators.recognize import recognize_pages_vgsl
 
     line = render_line("hello world")
     pg = np.zeros((line.shape[0] + 24, line.shape[1] + 24), dtype=bool)
     pg[12 : 12 + line.shape[0], 12 : 12 + line.shape[1]] = line
     g = mask_to_gray(pg)
-    assert [s.text for s in recognize_page_vgsl(g)[0]] == ["hello world"]
+    assert [s.text for s in recognize_pages_vgsl([g])[0][0]] == [
+        "hello world"
+    ]
     out = [
         s.text
-        for s in recognize_page_vgsl(g, charlists=("l", "", ""))[0]
+        for s in recognize_pages_vgsl([g], charlists=("l", "", ""))[0][0]
     ]
     assert out == ["heo word"]

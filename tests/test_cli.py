@@ -358,6 +358,22 @@ def test_cli_multipage_tiff_input(spark, tmp_path):
     assert open(base + ".txt").read() == "hello world\n\nsecond line\n"
 
 
+def test_cli_psm_osd_only_multipage_tiff(spark, tmp_path):
+    from tesseract_spark.functions.compose import PageSpec, compose_page
+    from tesseract_spark.functions.image_codecs import encode_gray_tiff
+
+    p1 = compose_page(PageSpec(paragraphs=[["hello world"]]))
+    p2 = compose_page(PageSpec(paragraphs=[["second line"]]))
+    p = tmp_path / "pages.tif"
+    p.write_bytes(encode_gray_tiff([p1.image, p2.image]))
+    base = str(tmp_path / "osd")
+    assert cli.run(["t", "--psm", "0", str(p), base], spark=spark) == 0
+    # one OSD report per TIFF page, in container order
+    osd = open(base + ".osd").read()
+    assert osd.count("Orientation in degrees: 0") == 2
+    assert osd.index("Page number: 0") < osd.index("Page number: 1")
+
+
 def test_cli_file_url_input(spark, page_png, tmp_path):
     base = str(tmp_path / "out")
     assert cli.run(["t", "file://" + page_png, base], spark=spark) == 0

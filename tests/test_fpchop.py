@@ -99,7 +99,7 @@ def test_fused_monospace_page_end_to_end():
     page = np.zeros((40, row.shape[1] + 16), dtype=bool)
     page[12:28, 8 : 8 + row.shape[1]] = row
     spans, _layout = recognize_page_legacy(mask_to_gray(page))
-    assert spans == [("text", chars)]
+    assert [(s.kind, s.text) for s in spans] == [("text", chars)]
 
 
 def test_proportional_row_not_fixed_pitch():

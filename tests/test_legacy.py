@@ -101,7 +101,7 @@ def test_page_parity_with_template_engine():
     page = compose_page(spec)
     legacy_spans, _ = recognize_page_legacy(page.image, spec.dpi)
     lstm_spans, _ = recognize_page(page.image, spec.dpi)
-    assert [(k, t) for k, t in legacy_spans] == [
+    assert [(s.kind, s.text) for s in legacy_spans] == [
         (s.kind, s.text) for s in lstm_spans
     ]
 
@@ -115,7 +115,7 @@ def test_page_parity_with_skew_and_scale():
     )
     page = cp(spec)
     spans, _ = recognize_page_legacy(page.image, 300)
-    assert spans == [
+    assert [(s.kind, s.text) for s in spans] == [
         (
             "text",
             "alpha beta gamma delta\nepsilon zeta eta theta\niota kap lam mu",

@@ -17,6 +17,7 @@ from tesseract_spark.operators.multilang import (
     K_ACCEPT_CONF,
     MultiLangState,
     get_lang_packs,
+    page_packs,
     select_best_words,
     word_acceptable,
     words_acceptable,
@@ -173,6 +174,17 @@ def test_eng_only_garbles_hebrew_line():
     spans, _w, _l = recognize_page_detail(page.image, 300, packs=packs)
     text = "\n".join(s.text for s in spans)
     assert W1 not in text
+
+
+def test_page_packs_skip_english_alone_and_osd():
+    # English alone takes the default single-language path; 'osd' names
+    # the orientation model and loads no recognition pack
+    assert page_packs(None) is None
+    assert page_packs("eng") is None
+    assert page_packs("osd") is None
+    assert page_packs("eng+osd") is None
+    assert [p.name for p in page_packs("heb+osd")] == ["heb"]
+    assert page_packs("eng+heb") is get_lang_packs("eng+heb")
 
 
 def test_mru_language_stickiness():

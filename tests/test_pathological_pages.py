@@ -17,7 +17,7 @@ from tesseract_spark.operators.osd import detect_orientation, detect_script
 from tesseract_spark.operators.recognize import (
     process_page,
     recognize_page,
-    recognize_page_vgsl,
+    recognize_pages_vgsl,
 )
 from tesseract_spark.operators.vertical import recognize_page_auto
 
@@ -39,7 +39,7 @@ ENTRY_POINTS = [
     ("page", recognize_page),
     ("auto", recognize_page_auto),
     ("legacy", recognize_page_legacy),
-    ("vgsl", recognize_page_vgsl),
+    ("vgsl", lambda g: recognize_pages_vgsl([g])[0]),
     ("combined", recognize_page_combined),
     ("psm_line", lambda g: process_page(g, psm=7)),
     ("psm_char", lambda g: process_page(g, psm=10)),

@@ -384,13 +384,13 @@ def test_beam_decode_strips_matches_greedy_engine():
 
 def test_recognize_page_vgsl_use_beam_parity():
     from tesseract_spark.functions.compose import PageSpec, compose_page
-    from tesseract_spark.operators.recognize import recognize_page_vgsl
+    from tesseract_spark.operators.recognize import recognize_pages_vgsl
 
     page = compose_page(
         PageSpec(paragraphs=[["hello world", "jumps over 13 dogs"]])
     )
-    greedy_spans, _ = recognize_page_vgsl(page.image)
-    beam_spans, _ = recognize_page_vgsl(page.image, use_beam=True)
+    greedy_spans, _ = recognize_pages_vgsl([page.image])[0]
+    beam_spans, _ = recognize_pages_vgsl([page.image], use_beam=True)[0]
     assert [(s.kind, s.text) for s in greedy_spans] == [
         (s.kind, s.text) for s in beam_spans
     ]
@@ -473,10 +473,7 @@ def test_recognize_pages_vgsl_cross_page_batch_parity():
     # width buckets pool strips from every page, but one strip's decode
     # never sees another (stridemap.cpp batching is caller-transparent)
     from tesseract_spark.functions.compose import PageSpec, compose_page
-    from tesseract_spark.operators.recognize import (
-        recognize_page_vgsl,
-        recognize_pages_vgsl,
-    )
+    from tesseract_spark.operators.recognize import recognize_pages_vgsl
 
     pages = [
         compose_page(PageSpec(paragraphs=[["hello world"]])),
@@ -487,7 +484,7 @@ def test_recognize_pages_vgsl_cross_page_batch_parity():
     ]
     batched = recognize_pages_vgsl([p.image for p in pages])
     for page, (spans, _layout) in zip(pages, batched):
-        solo, _ = recognize_page_vgsl(page.image)
+        solo, _ = recognize_pages_vgsl([page.image])[0]
         assert [(s.kind, s.text) for s in spans] == [
             (s.kind, s.text) for s in solo
         ]

@@ -186,7 +186,7 @@ def test_vgsl_engine_page_parity_with_template_engine():
     from tesseract_spark.functions.compose import PageSpec, compose_page
     from tesseract_spark.operators.recognize import (
         recognize_page,
-        recognize_page_vgsl,
+        recognize_pages_vgsl,
     )
 
     lines = ["big table a a", "big sort data data", "query a key a"]
@@ -196,7 +196,7 @@ def test_vgsl_engine_page_parity_with_template_engine():
                 PageSpec(paragraphs=[lines], scale=scale, skew=skew)
             )
             t_spans, _ = recognize_page(page.image)
-            v_spans, _ = recognize_page_vgsl(page.image)
+            v_spans, _ = recognize_pages_vgsl([page.image])[0]
             assert [s.text for s in t_spans if s.kind == "text"] == [
                 s.text for s in v_spans if s.kind == "text"
             ], (scale, skew)

@@ -46,7 +46,7 @@ def test_concurrent_recognize_matches_serial(pages):
 
 def test_concurrent_legacy_engine(pages):
     imgs, specs = pages
-    # the legacy walk already yields (kind, text) tuples
+    # whole SubSpans compare: kind, text, confidence and counts
     serial = [
         recognize_page_legacy(p.image, s.dpi)[0]
         for p, s in zip(imgs, specs)
