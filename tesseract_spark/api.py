@@ -15,13 +15,22 @@ operators/sinks.py) — pinned by the api-vs-sink parity tests — so a
 page rendered through the API equals the same page rendered by the
 distributed job.
 
+Parameters live in one typed dict over the registry in config.py
+(``config.PARAMS``, the table the CLI reads too): SetVariable,
+ReadConfigFile and Init's configs and vars all go through
+``config.set_param``.  ``Init``'s ``oem`` writes
+``tessedit_ocr_engine_mode`` before its configs and vars apply, so a
+var of that name wins; ``oem()`` and ``Recognize`` read it back.
+
 v1 routing notes (documented, warned where surprising):
 - GetUTF8Text's spans come from the page router
   (operators.recognize.recognize, the one OEM x PSM x language
   decision the CLI shares): OEM 0/1/2 select the legacy / VGSL /
   combined engines, then the PSM selects the ProcessPage path;
-- word-level surfaces (iterators, hOCR/TSV/box getters) run the
-  default engine's AUTO layout.
+- word-level surfaces (iterators, confidences, hOCR/TSV/box getters,
+  component images) read the word records of the default engine's
+  AUTO layout.  When the routed engine returns none, that word pass
+  runs once, on the first word-level call, not in Recognize.
 """
 
 from __future__ import annotations
@@ -32,13 +41,20 @@ import numpy as np
 
 from . import __version__
 from .config import (  # noqa: F401  (OcrEngineMode, re-exported)
+    CONFIGS,
+    LANGS,
     OEM_DEFAULT,
     OEM_LSTM_ONLY,
     OEM_TESSERACT_LSTM_COMBINED,
     OEM_TESSERACT_ONLY,
+    PARAMS,
     PSM_AUTO,
     PSM_OSD_ONLY,
     charlists_of,
+    default_params,
+    params_text,
+    resolve_dpi,
+    set_param,
 )
 
 # PageIteratorLevel (include/tesseract/publictypes.h:216-222)
@@ -48,39 +64,15 @@ RIL_TEXTLINE = 2
 RIL_WORD = 3
 RIL_SYMBOL = 4
 
-# the typed runtime param registry (src/ccutil/params.h; the subset the
-# engine honors plus the names baseapi_test.cc pins).  kind: i/b/d/s.
-PARAM_DEFS: dict[str, tuple[str, object]] = {
-    "tessedit_pageseg_mode": ("i", PSM_AUTO),
-    "tessedit_ocr_engine_mode": ("i", OEM_DEFAULT),
-    "tessedit_ambigs_training": ("b", False),
-    "tessedit_init_config_only": ("b", False),
-    "tessedit_char_whitelist": ("s", ""),
-    "tessedit_char_blacklist": ("s", ""),
-    "tessedit_char_unblacklist": ("s", ""),
-    "segment_penalty_dict_frequent_word": ("d", 1.0),
-    "preserve_interword_spaces": ("b", False),
-    "user_defined_dpi": ("i", 0),
-    "hocr_font_info": ("b", False),
-    "lstm_choice_mode": ("i", 0),
-    "unlv_tilde_crunching": ("b", False),
-    "paragraph_debug_level": ("i", 0),
-    "debug_file": ("s", ""),
-    "textonly_pdf": ("b", False),
-    "tessedit_create_txt": ("b", False),
-    "tessedit_create_hocr": ("b", False),
-    "tessedit_create_alto": ("b", False),
-    "tessedit_create_page_xml": ("b", False),
-    "tessedit_create_tsv": ("b", False),
-    "tessedit_create_pdf": ("b", False),
-    "tessedit_write_unlv": ("b", False),
-    "tessedit_create_boxfile": ("b", False),
-    "tessedit_create_lstmbox": ("b", False),
-    "tessedit_create_wordstrbox": ("b", False),
+# the (block, par, line, word) prefix that identifies a word's element
+# at each level
+_LEVEL_KEY = {
+    RIL_BLOCK: lambda x: (x.block_num,),
+    RIL_PARA: lambda x: (x.block_num, x.par_num),
+    RIL_TEXTLINE: lambda x: (x.block_num, x.par_num, x.line_num),
+    RIL_WORD: lambda x: (x.block_num, x.par_num, x.line_num, x.word_num),
 }
-
-_TRUE_STRINGS = {"1", "t", "true", "yes"}
-_FALSE_STRINGS = {"0", "f", "false", "no"}
+_LEVEL_KEY[RIL_SYMBOL] = _LEVEL_KEY[RIL_WORD]
 
 
 def _xml_escape(s: str) -> str:
@@ -126,9 +118,7 @@ class ResultIterator:
 
     def __init__(self, words: list):
         # words arrive in reading order (block, par, line, word)
-        self._words = sorted(
-            words, key=lambda w: (w.block_num, w.par_num, w.line_num,
-                                  w.word_num))
+        self._words = sorted(words, key=_LEVEL_KEY[RIL_WORD])
         self._wi = 0
         self._si = 0
 
@@ -159,11 +149,7 @@ class ResultIterator:
         if level == RIL_WORD:
             self._wi += 1
             return self._wi < len(self._words)
-        key = {
-            RIL_BLOCK: lambda x: (x.block_num,),
-            RIL_PARA: lambda x: (x.block_num, x.par_num),
-            RIL_TEXTLINE: lambda x: (x.block_num, x.par_num, x.line_num),
-        }[level]
+        key = _LEVEL_KEY[level]
         cur = key(w)
         while self._wi < len(self._words) and key(self._word()) == cur:
             self._wi += 1
@@ -173,15 +159,7 @@ class ResultIterator:
         w = self._word()
         if w is None:
             return []
-        key = {
-            RIL_BLOCK: lambda x: (x.block_num,),
-            RIL_PARA: lambda x: (x.block_num, x.par_num),
-            RIL_TEXTLINE: lambda x: (x.block_num, x.par_num, x.line_num),
-            RIL_WORD: lambda x: (x.block_num, x.par_num, x.line_num,
-                                 x.word_num),
-            RIL_SYMBOL: lambda x: (x.block_num, x.par_num, x.line_num,
-                                   x.word_num),
-        }[level]
+        key = _LEVEL_KEY[level]
         cur = key(w)
         return [x for x in self._words if key(x) == cur]
 
@@ -238,18 +216,10 @@ class ResultIterator:
             return False
         if self._wi == 0:
             return True
-        prev, cur = self._words[self._wi - 1], self._word()
-        keys = {
-            RIL_BLOCK: lambda x: (x.block_num,),
-            RIL_PARA: lambda x: (x.block_num, x.par_num),
-            RIL_TEXTLINE: lambda x: (x.block_num, x.par_num, x.line_num),
-            RIL_WORD: lambda x: (x.block_num, x.par_num, x.line_num,
-                                 x.word_num),
-            RIL_SYMBOL: lambda x: None,
-        }
         if level == RIL_SYMBOL:
             return True
-        return keys[level](prev) != keys[level](cur)
+        key = _LEVEL_KEY[level]
+        return key(self._words[self._wi - 1]) != key(self._word())
 
     def IsAtFinalElement(self, level: int, element: int) -> bool:
         """True when the current ``element`` is the last one inside the
@@ -261,14 +231,10 @@ class ResultIterator:
             return False
         if self._wi + 1 >= len(self._words):
             return True
-        keys = {
-            RIL_BLOCK: lambda x: (x.block_num,),
-            RIL_PARA: lambda x: (x.block_num, x.par_num),
-            RIL_TEXTLINE: lambda x: (x.block_num, x.par_num, x.line_num),
-        }
-        if level not in keys:
+        if level not in (RIL_BLOCK, RIL_PARA, RIL_TEXTLINE):
             return True
-        return keys[level](self._words[self._wi + 1]) != keys[level](w)
+        key = _LEVEL_KEY[level]
+        return key(self._words[self._wi + 1]) != key(w)
 
     # ---- LTRResultIterator word accessors ----
 
@@ -309,15 +275,15 @@ class TessBaseAPI:
     """The reference's central API object (baseapi.h:96)."""
 
     def __init__(self):
-        self._params = {k: v for k, (_t, v) in PARAM_DEFS.items()}
+        self._params = default_params()
         self._lang = None
-        self._oem = OEM_DEFAULT
         self._image = None
         self._dpi = 300
         self._rect = None
         self._input_name = ""
         self._spans = None
         self._words = None
+        self._word_pass = None  # the deferred word pass of Recognize
         self._layout = None
         self._user_words = None
         self._user_dawg = None  # built lazily, invalidated by SetUserWords
@@ -336,9 +302,9 @@ class TessBaseAPI:
         """0 on success, -1 on failure (unknown language/engine).  The
         engine loads lazily at Recognize — config-only init
         (tessedit_init_config_only, baseapi_test InitConfigOnlyTest) is
-        the natural fast path here."""
-        from .cli import CONFIGS, LANGS
-
+        the natural fast path here.  ``oem`` is written to
+        tessedit_ocr_engine_mode first, so configs and vars may
+        override it."""
         lang = lang or "eng"
         for part in lang.split("+"):
             if part not in LANGS and part != "osd":
@@ -346,7 +312,7 @@ class TessBaseAPI:
         if not 0 <= int(oem) <= OEM_DEFAULT:
             return -1
         self._lang = lang
-        self._oem = int(oem)
+        self._params["tessedit_ocr_engine_mode"] = int(oem)
         self._datapath = datapath
         for name in configs or []:
             for k, v in CONFIGS.get(name, {}).items():
@@ -372,56 +338,32 @@ class TessBaseAPI:
         return self._lang or ""
 
     def oem(self) -> int:
-        return self._oem
+        return int(self._params["tessedit_ocr_engine_mode"])
 
     # ---- variables (SetVariable baseapi.cpp:211-266) ----
 
     def SetVariable(self, name: str, value: str) -> bool:
-        spec = PARAM_DEFS.get(name)
-        if spec is None:
-            return False
-        kind, _d = spec
-        s = str(value)
-        if kind == "i":
-            try:
-                self._params[name] = int(s, 10)
-            except ValueError:
-                return False
-        elif kind == "d":
-            try:
-                self._params[name] = float(s)
-            except ValueError:
-                return False
-        elif kind == "b":
-            low = s.strip().lower()
-            if low in _TRUE_STRINGS:
-                self._params[name] = True
-            elif low in _FALSE_STRINGS:
-                self._params[name] = False
-            else:
-                return False
-        else:
-            self._params[name] = s
-        return True
+        return set_param(self._params, name, value)
+
+    def _get(self, name: str, kind: str):
+        """The typed value, or None for an unknown name or another kind."""
+        spec = PARAMS.get(name)
+        return self._params[name] if spec and spec[0] == kind else None
 
     def GetIntVariable(self, name: str):
-        spec = PARAM_DEFS.get(name)
-        return int(self._params[name]) if spec and spec[0] == "i" else None
+        return self._get(name, "i")
 
     def GetBoolVariable(self, name: str):
-        spec = PARAM_DEFS.get(name)
-        return bool(self._params[name]) if spec and spec[0] == "b" else None
+        return self._get(name, "b")
 
     def GetDoubleVariable(self, name: str):
-        spec = PARAM_DEFS.get(name)
-        return float(self._params[name]) if spec and spec[0] == "d" else None
+        return self._get(name, "d")
 
     def GetStringVariable(self, name: str):
-        spec = PARAM_DEFS.get(name)
-        return str(self._params[name]) if spec and spec[0] == "s" else None
+        return self._get(name, "s")
 
     def PrintVariables(self) -> str:
-        return "\n".join(f"{k}\t{self._params[k]}" for k in PARAM_DEFS)
+        return params_text(self._params)
 
     # ---- page setup ----
 
@@ -465,15 +407,16 @@ class TessBaseAPI:
         return img
 
     def _dpi_now(self) -> int:
-        return int(self._params["user_defined_dpi"]) or self._dpi
+        return resolve_dpi(self._params, self._dpi)
 
     # ---- recognition ----
 
     def Recognize(self, monitor=None) -> int:
         """0 on success (baseapi.cpp:Recognize).  Spans come from the
         page router (operators.recognize.recognize: OEM engine, then the
-        PSM dispatch); the word-level surface runs the default engine's
-        AUTO path (v1 note in the module doc)."""
+        PSM dispatch).  When the routed engine returns no word records,
+        the default engine's AUTO word pass is deferred to the first
+        word-level getter (v1 note in the module doc)."""
         from .operators.multilang import page_packs
         from .operators.recognize import recognize
 
@@ -481,24 +424,33 @@ class TessBaseAPI:
         dpi = self._dpi_now()
         psm = self.GetPageSegMode()
         route = dict(
-            dawg=self._get_user_dawg(), packs=page_packs(self._lang),
+            dawg=self._get_user_dawg(),
+            packs=page_packs(self._lang, dict_words=self._user_words),
             charlists=charlists_of(self._params), want_choices=True,
             font_attrs=bool(self._params["hocr_font_info"]),
-            monitor=monitor,
             carry_adapted=self._adapted,  # AdaptToWordStr-taught
         )
         spans, words, layout = recognize(
-            gray, dpi, oem=self._oem, psm=psm, **route)
-        if words is None:
-            # word surface (iterators + word-level renderers)
-            words = [] if psm == PSM_OSD_ONLY else recognize(
-                gray, dpi, oem=OEM_DEFAULT, psm=PSM_AUTO, **route)[1]
+            gray, dpi, oem=self.oem(), psm=psm, monitor=monitor, **route)
+        if words is None and psm == PSM_OSD_ONLY:
+            words = []
+        self._word_pass = None if words is not None else (
+            lambda: recognize(
+                gray, dpi, oem=OEM_DEFAULT, psm=PSM_AUTO, **route)[1])
         self._spans, self._words, self._layout = spans, words, layout
         return 0
 
     def _ensure(self):
         if self._spans is None:
             self.Recognize()
+
+    def _page_words(self) -> list:
+        """The page's word records, running the deferred word pass of
+        Recognize on the first call."""
+        self._ensure()
+        if self._words is None:
+            self._words = self._word_pass()
+        return self._words
 
     def _span_texts(self) -> list[str]:
         return [s.text for s in self._spans if s.kind in ("text", "osd")]
@@ -531,17 +483,14 @@ class TessBaseAPI:
         }
 
     def MeanTextConf(self) -> int:
-        self._ensure()
         confs = self.AllWordConfidences()
         return int(sum(confs) / len(confs)) if confs else 0
 
     def AllWordConfidences(self) -> list[int]:
-        self._ensure()
-        return [int(math.floor(w.conf + 0.5)) for w in self._words]
+        return [int(math.floor(w.conf + 0.5)) for w in self._page_words()]
 
     def GetIterator(self) -> ResultIterator:
-        self._ensure()
-        return ResultIterator(self._words)
+        return ResultIterator(self._page_words())
 
     def GetThresholdedImage(self) -> np.ndarray:
         from .functions.image_ops import binarize_otsu
@@ -553,26 +502,20 @@ class TessBaseAPI:
         GetComponentImages/GetRegions/GetTextlines/GetWords family
         (baseapi.h:350-426).  Runs from the word records (works even if
         only layout ran — IteratesParagraphsEvenIfNotDetected)."""
-        self._ensure()
+        words = self._page_words()
         gray = self._page_image()
         if level == RIL_SYMBOL:
             # per-symbol components via the engine's advance-model char
             # split (the GetBoxText geometry) — every PageIteratorLevel
             # the reference API accepts is valid here
             out = []
-            for w in self._words:
+            for w in words:
                 for _c, l, t, r, b in _char_boxes(w):
                     out.append(((l, t, r, b), gray[t:b, l:r]))
             return out
         groups: dict[tuple, list] = {}
-        key = {
-            RIL_BLOCK: lambda w: (w.block_num,),
-            RIL_PARA: lambda w: (w.block_num, w.par_num),
-            RIL_TEXTLINE: lambda w: (w.block_num, w.par_num, w.line_num),
-            RIL_WORD: lambda w: (w.block_num, w.par_num, w.line_num,
-                                 w.word_num),
-        }[level]
-        for w in self._words:
+        key = _LEVEL_KEY[level]
+        for w in words:
             groups.setdefault(key(w), []).append(w)
         out = []
         for _k, ws in sorted(groups.items()):
@@ -624,18 +567,12 @@ class TessBaseAPI:
     # ---- renderer-parity getters ----
 
     def _sorted_words(self):
-        return sorted(
-            self._words, key=lambda w: (w.block_num, w.par_num, w.line_num,
-                                        w.word_num))
+        return sorted(self._page_words(), key=_LEVEL_KEY[RIL_WORD])
 
     def GetHOCRText(self, page_number: int = 0) -> str:
         """Byte-parity with sinks.to_hocr on the default path (no font
         info, lstm_choice_mode 0) — pinned by test_api parity."""
-        self._ensure()
-        lines: dict[tuple, list] = {}
-        for w in self._sorted_words():
-            lines.setdefault(
-                (w.block_num, w.par_num, w.line_num), []).append(w)
+        lines = self._lines()
 
         from .operators.bidi import _RTL_RANGES
 
@@ -692,7 +629,6 @@ class TessBaseAPI:
     def GetTSVText(self, page_number: int = 0) -> str:
         """The to_tsv 12-column roll-up (GetTSVText baseapi.cpp:
         1353-1496), field-parity with the sink."""
-        self._ensure()
         ws = self._sorted_words()
         rows = []
 
@@ -733,7 +669,6 @@ class TessBaseAPI:
 
     def GetBoxText(self, page_number: int = 0) -> str:
         """GetBoxText (baseapi.cpp:1497-1545): char boxes bottom-up."""
-        self._ensure()
         h = self._page_image().shape[0]
         out = []
         for w in self._sorted_words():
@@ -744,11 +679,7 @@ class TessBaseAPI:
     def GetAltoText(self, page_number: int = 0) -> str:
         """ALTO XML (altorenderer.cpp) — byte-parity with
         sinks.to_alto, pinned by test_api."""
-        self._ensure()
-        lines: dict[tuple, list] = {}
-        for w in self._sorted_words():
-            lines.setdefault(
-                (w.block_num, w.par_num, w.line_num), []).append(w)
+        lines = self._lines()
         line_xml: dict[tuple, str] = {}
         for k, ws in lines.items():
             words = "".join(
@@ -773,11 +704,7 @@ class TessBaseAPI:
         """PRImA PAGE XML (pagerenderer.cpp:628-710) — byte-parity with
         sinks.to_page_xml; every call emits one balanced <Page> element
         (PAGEXMLMultiPageClosingTags, baseapi_test.cc:399)."""
-        self._ensure()
-        lines: dict[tuple, list] = {}
-        for w in self._sorted_words():
-            lines.setdefault(
-                (w.block_num, w.par_num, w.line_num), []).append(w)
+        lines = self._lines()
         line_xml: dict[tuple, str] = {}
         for k, ws in lines.items():
             l = min(w.left for w in ws)
@@ -821,7 +748,6 @@ class TessBaseAPI:
         bottom-up y — byte-parity with the reference renderer,
         including its quirk of skipping the final tab record when any
         raw coordinate of the last line is 0 (:76)."""
-        self._ensure()
         h = self._page_image().shape[0]
         out = []
         l = t = r = b = 0
@@ -847,7 +773,6 @@ class TessBaseAPI:
         record per SYMBOL carrying its whole textline's box (bottom-up,
         right+5 pad), space records between words, tab record per line
         — byte-parity with sinks.to_lstm_box."""
-        self._ensure()
         h = self._page_image().shape[0]
         out = []
         for _k, ws in sorted(self._lines().items()):
@@ -938,8 +863,7 @@ class TessBaseAPI:
         classify_rotation arithmetic for that case.  (Vertical pages
         are the pipeline's recognize_page_auto path, which reports
         flow per span, not through this facade call.)"""
-        self._ensure()
-        blocks = sorted({w.block_num for w in self._words})
+        blocks = sorted({w.block_num for w in self._page_words()})
         return [(0, False) for _ in blocks]
 
     def DetectOrientationScript(self):
@@ -1030,17 +954,14 @@ class TessBaseAPI:
 
     def ProcessPages(self, pages, renderer=None):
         """ProcessPages (baseapi.cpp:1080-1180) over in-memory pages:
-        each page is a grayscale array or PNG bytes; Recognize runs per
-        page and the text renderer accumulates with form-feed page
-        separators (TessTextRenderer semantics).  ``renderer``: optional
+        each page is a grayscale array or PNG/JPEG/TIFF bytes (SetImage
+        sniffs the format); Recognize runs per page and the text
+        renderer accumulates with form-feed page separators
+        (TessTextRenderer semantics).  ``renderer``: optional
         callable(page_index, api) -> str overriding the text rendering.
         Returns the document string."""
-        from .functions.png_codec import decode_gray_png
-
         out = []
         for i, page in enumerate(pages):
-            if isinstance(page, (bytes, bytearray)):
-                page = decode_gray_png(bytes(page))
             self.SetImage(page)
             self.Recognize()
             out.append(renderer(i, self) if renderer else self.GetUTF8Text())
@@ -1051,11 +972,7 @@ class TessBaseAPI:
         '^' suspects — the to_unlv word-level confidence marks."""
         from .operators.sinks import K_REJECT_CONF, K_SUSPECT_CONF
 
-        self._ensure()
-        lines: dict[tuple, list] = {}
-        for w in self._sorted_words():
-            lines.setdefault(
-                (w.block_num, w.par_num, w.line_num), []).append(w)
+        lines = self._lines()
         out = []
         for _k, ws in sorted(lines.items()):
             marked = []

@@ -23,10 +23,15 @@ txt, tsv, hocr, xml (ALTO), page.xml, pdf, unlv, box (makebox /
 lstmbox / wordstrbox), osd.  ``outputbase`` of ``stdout`` or ``-``
 writes the text stream to standard output.
 
+Parameters resolve (``resolve_params``) into a typed dict of the
+registry TessBaseAPI reads (``config.PARAMS``): config files, then
+``-c`` pairs, then ``--psm``/``--oem``/``--dpi``, which write the same
+names — so a flag wins, and a ``-c`` value counts when no flag is given.
+
 v1 routing restrictions (each warned, none silently wrong):
 - word-level renderers (tsv/hocr/alto/page/pdf/box/unlv) always run
-  the default engine at PSM_AUTO — non-default --psm/--oem/-l apply
-  to the span-level txt path only;
+  the default engine at PSM_AUTO — non-default PSM/OEM/-l apply to the
+  span-level txt path only (the character lists apply to both);
 - --oem 0/1/2 and multi-language -l run PSM_AUTO layout.
 """
 
@@ -34,10 +39,13 @@ from __future__ import annotations
 
 import os
 import sys
-from dataclasses import dataclass, field, fields
+from dataclasses import dataclass, field
 
 from . import __version__
-from .config import OEM_DEFAULT, PSM_AUTO, PSM_OSD_ONLY, charlists_of
+from .config import (
+    CONFIGS, LANGS, OEM_DEFAULT, PSM_AUTO, PSM_OSD_ONLY, charlists_of,
+    default_params, params_text, resolve_dpi, set_param,
+)
 
 # stringToPSM (tesseract.cpp:330-363)
 PSM_MAP = {
@@ -69,48 +77,18 @@ OEM_MAP = {
 }
 OEM_COUNT = 4
 
-# tessdata/configs/* analogues: each config file is a param assignment
-# list; the renderer configs set one tessedit_create_* each
-# (tessdata/configs/{txt,hocr,tsv,alto,page,pdf,unlv,makebox,lstmbox,
-# wordstrbox,digits,quiet}).
-CONFIGS: dict[str, dict[str, str]] = {
-    "txt": {"tessedit_create_txt": "1"},
-    "hocr": {"tessedit_create_hocr": "1", "hocr_font_info": "0"},
-    "tsv": {"tessedit_create_tsv": "1"},
-    "alto": {"tessedit_create_alto": "1"},
-    "page": {"tessedit_create_page_xml": "1"},
-    "pdf": {"tessedit_create_pdf": "1"},
-    "unlv": {"tessedit_write_unlv": "1", "unlv_tilde_crunching": "T"},
-    "makebox": {"tessedit_create_boxfile": "1"},
-    "lstmbox": {"tessedit_create_lstmbox": "1"},
-    "wordstrbox": {"tessedit_create_wordstrbox": "1"},
-    "digits": {"tessedit_char_whitelist": "0123456789-."},
-    "quiet": {"debug_file": "/dev/null"},
-}
-
-# truthy strings per ParamUtils::SetParam bool reads ("T"/"true"/"1")
-_TRUE = {"1", "t", "true", "yes"}
-
-
-def _is_true(v: str) -> bool:
-    return str(v).strip().lower() in _TRUE
-
-
-LANGS = ("deva", "eng", "equ", "heb")  # the built-in packs (multilang)
-
-
 @dataclass
 class CliArgs:
     image: str | None = None
     outputbase: str | None = None
     lang: str | None = None
     datapath: str | None = None
-    dpi: int = 0
+    dpi: int = 0  # --dpi; 0 = not given
     loglevel: str = ""
     user_words: str | None = None
     user_patterns: str | None = None
-    psm: int = PSM_AUTO
-    oem: int = OEM_DEFAULT
+    psm: int | None = None  # --psm; None = not given
+    oem: int | None = None  # --oem; None = not given
     list_langs: bool = False
     print_parameters: bool = False
     print_fonts_table: bool = False
@@ -251,43 +229,48 @@ def parse_args(argv: list[str]) -> CliArgs | None:
 
     a.configs = list(argv[i:])
 
-    if a.psm == PSM_OSD_ONLY:  # OSD-only wants the osd language
-        if a.lang is not None and a.lang != "osd":
-            print(f"Warning, detects only orientation with -l {a.lang}",
-                  file=sys.stderr)
-        else:
-            a.lang = "osd"
-
     if a.outputbase is None and not noocr:
         _print_help(prog)
         return None
     return a
 
 
-def resolve_params(a: CliArgs) -> dict[str, str]:
-    """Config files first, then -c vars on top (main(),
-    tesseract.cpp:757-764: Init reads configs, then SetVariable applies
-    each -c pair).  A -c name the engine does not know (neither an
-    EngineConfig field nor in api.PARAM_DEFS) is reported on stderr and
-    skipped, and the run goes on, as the reference's failed SetVariable
-    does."""
-    from .api import PARAM_DEFS
-    from .config import EngineConfig
-
-    params: dict[str, str] = {}
+def resolve_params(a: CliArgs) -> dict[str, object]:
+    """The run's typed params: config files, then -c vars (main(),
+    tesseract.cpp:757-764), then the --psm/--oem/--dpi flags.  A -c pair
+    the registry rejects (unknown name, unparsable value) is reported on
+    stderr and skipped, as the reference's failed SetVariable is."""
+    params = default_params()
     for name in a.configs:
         cfg = CONFIGS.get(name)
         if cfg is None:
             # unknown config: the reference fails inside Init; match it
             raise SystemExit(f"Error, unknown config file '{name}'")
-        params.update(cfg)
-    known = {f.name for f in fields(EngineConfig)} | set(PARAM_DEFS)
+        for k, v in cfg.items():
+            set_param(params, k, v)
     for name, value in a.vars.items():
-        if name in known:
-            params[name] = value
-        else:
+        if not set_param(params, name, value):
             print(f"Could not set option: {name}={value}", file=sys.stderr)
+    flags = {
+        "tessedit_pageseg_mode": a.psm,
+        "tessedit_ocr_engine_mode": a.oem,
+        "user_defined_dpi": a.dpi or None,
+    }
+    params.update((k, v) for k, v in flags.items() if v is not None)
     return params
+
+
+def resolve_lang(a: CliArgs, params) -> str:
+    """-l, defaulting to eng.  An OSD-only run (by the resolved PSM)
+    wants the osd language; an explicit other language only warns
+    (ParseArgs, tesseract.cpp:505-516)."""
+    if params["tessedit_pageseg_mode"] != PSM_OSD_ONLY:
+        return a.lang or "eng"
+    if a.lang is not None and a.lang != "osd":
+        print(f"Warning, detects only orientation with -l {a.lang}",
+              file=sys.stderr)
+        return a.lang
+    return "osd"
 
 
 # renderer order of PreloadRenderers (tesseract.cpp:523-645)
@@ -310,14 +293,14 @@ EXT = {
 }
 
 
-def select_renderers(params: dict[str, str], psm: int) -> list[str]:
+def select_renderers(params, psm: int) -> list[str]:
     """PreloadRenderers: PSM_OSD_ONLY -> osd only; else the configured
     set, defaulting to txt when nothing else was requested
     (tesseract.cpp:623-635)."""
     if psm == PSM_OSD_ONLY:
         return ["osd"]
-    out = [name for key, name in _RENDERER_ORDER if _is_true(params.get(key, "0"))]
-    if _is_true(params.get("tessedit_create_txt", "0")) or not out:
+    out = [name for key, name in _RENDERER_ORDER if params.get(key)]
+    if params.get("tessedit_create_txt") or not out:
         out.append("txt")
     return out
 
@@ -414,7 +397,7 @@ def _load_input(image: str, dpi: int) -> tuple[list[dict], list[dict]]:
                         pages.append((os.path.basename(p), pf.read()))
     doc_id = "doc-0"
     media_rows = [
-        {"media_ref": f"m-{k:04d}-{name}", "png": png, "dpi": dpi or 300}
+        {"media_ref": f"m-{k:04d}-{name}", "png": png, "dpi": dpi}
         for k, (name, png) in enumerate(pages)
     ]
     docs_rows = [
@@ -458,9 +441,9 @@ def _media_pages(docs, media):
     )
 
 
-def _cli_spans(spark, docs, media, a: CliArgs, charlists, dict_words,
+def _cli_spans(spark, docs, media, params, lang, dict_words,
                dict_patterns):
-    """Span-level extraction routed by --psm/--oem/-l.
+    """Span-level extraction routed by the resolved PSM, OEM and -l.
 
     The default oem 3 + psm AUTO + single-language case delegates to
     the flagship ``ocr_documents`` (the optimized salted-shuffle path);
@@ -471,15 +454,16 @@ def _cli_spans(spark, docs, media, a: CliArgs, charlists, dict_words,
 
     from .pipeline import ocr_documents
 
-    lang = a.lang or "eng"
-    if a.oem == OEM_DEFAULT and a.psm == PSM_AUTO and lang == "eng":
+    oem = params["tessedit_ocr_engine_mode"]
+    psm = params["tessedit_pageseg_mode"]
+    charlists = charlists_of(params)
+    if oem == OEM_DEFAULT and psm == PSM_AUTO and lang == "eng":
         flat = ocr_documents(
             spark, docs, media, dict_words=dict_words,
             dict_patterns=dict_patterns, charlists=charlists,
         )
         return flat.select("doc_id", "offset", "kind", "text", "media_ref")
 
-    oem, psm, dpi_override = a.oem, a.psm, a.dpi
     uw = list(dict_words) if dict_words else None
 
     def udf(batches):
@@ -502,12 +486,11 @@ def _cli_spans(spark, docs, media, a: CliArgs, charlists, dict_words,
                 # content autodetect + multipage container iteration
                 # (baseapi.cpp:1033-1194, :958-998): every page of the
                 # media blob contributes spans in container order
-                use_dpi = dpi_override or int(dpi)
                 spans = [
                     s
                     for gray in decode_gray_pages(bytes(png))
                     for s in recognize(
-                        gray, use_dpi, oem=oem, psm=psm, dawg=dawg,
+                        gray, int(dpi), oem=oem, psm=psm, dawg=dawg,
                         packs=packs, charlists=charlists)[0]
                 ]
                 for k, s in enumerate(spans):
@@ -528,7 +511,7 @@ def _cli_spans(spark, docs, media, a: CliArgs, charlists, dict_words,
 
 
 def _render_outputs(
-    spark, docs, media, spans, renderers, params, a: CliArgs, dict_words
+    spark, docs, media, spans, renderers, params, lang, dict_words
 ):
     """Build each requested renderer's DataFrame.  Returns
     {renderer: (DataFrame, content_column, order_exprs)} — one row per
@@ -566,8 +549,9 @@ def _render_outputs(
     word_renderers = [r for r in renderers if r not in ("txt", "osd")]
     words = None
     if word_renderers:
-        if (a.psm != PSM_AUTO or a.oem != OEM_DEFAULT
-                or (a.lang or "eng") != "eng"):
+        if (params["tessedit_pageseg_mode"] != PSM_AUTO
+                or params["tessedit_ocr_engine_mode"] != OEM_DEFAULT
+                or lang != "eng"):
             print(
                 "Warning, word-level renderers run the default engine at "
                 "PSM_AUTO in this build",
@@ -575,8 +559,9 @@ def _render_outputs(
             )
         words = S.ocr_words(
             spark, docs, media,
-            font_attrs=_is_true(params.get("hocr_font_info", "0")),
+            font_attrs=params["hocr_font_info"],
             wordlist=dict_words,
+            charlists=charlists_of(params),
         )
     for r in renderers:
         if r == "txt":
@@ -599,8 +584,8 @@ def _render_outputs(
             out[r] = (
                 S.to_hocr(
                     words,
-                    lstm_choice_mode=int(params.get("lstm_choice_mode", "0")),
-                    font_info=_is_true(params.get("hocr_font_info", "0")),
+                    lstm_choice_mode=params["lstm_choice_mode"],
+                    font_info=params["hocr_font_info"],
                 ),
                 "hocr", ["doc_id", "media_ref"],
             )
@@ -613,8 +598,7 @@ def _render_outputs(
             out[r] = (
                 S.to_unlv(
                     words,
-                    quality_rejection=_is_true(
-                        params.get("unlv_tilde_crunching", "0")),
+                    quality_rejection=params["unlv_tilde_crunching"],
                 ),
                 "unlv", ["doc_id", "media_ref"],
             )
@@ -633,8 +617,8 @@ def _render_outputs(
                 S.to_box(words, page_heights=_page_heights()),
                 "box_line", _box_order("box_line"))
         elif r == "pdf":
-            textonly = _is_true(params.get("textonly_pdf", "0"))
-            images = None if textonly else media.select("media_ref", "png")
+            images = (None if params["textonly_pdf"]
+                      else media.select("media_ref", "png"))
             out[r] = (
                 S.to_pdf(words, images=images), "pdf",
                 ["doc_id", "media_ref"])
@@ -690,13 +674,10 @@ def run(argv: list[str], spark=None) -> int:
         for lang in LANGS:
             print(lang)
         return 0
+    params = resolve_params(a)
     if a.print_parameters:
-        from .config import EngineConfig
-        import dataclasses
-
         print("Tesseract parameters:")
-        for f_ in dataclasses.fields(EngineConfig):
-            print(f"{f_.name}\t{f_.default}")
+        print(params_text(params))
         return 0
     if a.print_fonts_table:
         from .lstm.templates import get_net_fonts
@@ -706,16 +687,14 @@ def run(argv: list[str], spark=None) -> int:
             print(f"ID {k}: {name}")
         return 0
 
-    lang = a.lang or "eng"
+    psm = params["tessedit_pageseg_mode"]
+    lang = resolve_lang(a, params)
     for part in lang.split("+"):
         if part not in LANGS and part != "osd":
             print(f"Error, unknown language '{part}'", file=sys.stderr)
             return 1
 
-    params = resolve_params(a)
-    renderers = select_renderers(params, a.psm)
-
-    charlists = charlists_of(params)
+    renderers = select_renderers(params, psm)
     dict_words = _read_wordfile(a.user_words) if a.user_words else None
     dict_patterns = (
         _read_wordfile(a.user_patterns) if a.user_patterns else None
@@ -741,12 +720,17 @@ def run(argv: list[str], spark=None) -> int:
                 .getOrCreate()
             )
     try:
+        dpi = resolve_dpi(params, None)  # a local file claims no dpi
         corpus_mode = a.image is not None and os.path.isdir(a.image)
         if corpus_mode:
             docs = spark.read.parquet(os.path.join(a.image, "documents.parquet"))
             media = spark.read.parquet(os.path.join(a.image, "media.parquet"))
+            if params["user_defined_dpi"]:
+                from pyspark.sql import functions as F
+
+                media = media.withColumn("dpi", F.lit(dpi))
         else:
-            docs_rows, media_rows = _load_input(a.image, a.dpi)
+            docs_rows, media_rows = _load_input(a.image, dpi)
             from pyspark.sql import types as T
 
             docs = spark.createDataFrame(
@@ -769,19 +753,14 @@ def run(argv: list[str], spark=None) -> int:
                     T.StructField("dpi", T.IntegerType()),
                 ]),
             )
-        if a.dpi:
-            from pyspark.sql import functions as F
-
-            media = media.withColumn("dpi", F.lit(int(a.dpi)))
-
-        if a.psm == PSM_OSD_ONLY:
+        if psm == PSM_OSD_ONLY:
             spans = _osd_spans(spark, docs, media)
         else:
             spans = _cli_spans(
-                spark, docs, media, a, charlists, dict_words, dict_patterns)
+                spark, docs, media, params, lang, dict_words, dict_patterns)
 
         outs = _render_outputs(
-            spark, docs, media, spans, renderers, params, a, dict_words)
+            spark, docs, media, spans, renderers, params, lang, dict_words)
         for r, (df, col, order) in outs.items():
             if corpus_mode:
                 df.write.mode("overwrite").parquet(

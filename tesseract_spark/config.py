@@ -1,14 +1,13 @@
 """Engine configuration — the reference's runtime params surface.
 
-Mirrors the behavior-relevant subset of the ~600 named params
-(src/ccutil/params.h; ``SetVariable`` src/api/baseapi.cpp:211) as a frozen
-dataclass that is broadcast once per job.  Param names follow the
-reference's where a direct counterpart exists.
+``PARAMS`` is the one typed parameter registry (a subset of
+src/ccutil/params.h).  TessBaseAPI and the CLI each hold a
+``default_params`` dict written by ``set_param`` (SetVariable,
+src/api/baseapi.cpp:211); ``charlists_of`` and ``resolve_dpi`` turn it
+into the pipeline's keyword arguments.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass, field
 
 # DPI credibility window (kMinCredibleResolution / kMaxCredibleResolution,
 # src/api/baseapi.cpp:2004-2020)
@@ -43,26 +42,104 @@ def clamp_dpi(dpi: int | None) -> int:
     return max(MIN_CREDIBLE_DPI, min(MAX_CREDIBLE_DPI, int(dpi)))
 
 
-@dataclass(frozen=True)
-class EngineConfig:
-    """Broadcastable job config (the params.h subset we honor)."""
-
-    tessedit_pageseg_mode: int = PSM_AUTO
-    user_defined_dpi: int = 0  # 0 = honor per-row dpi, else override
-    user_words: tuple[str, ...] = field(default=())  # extra DAWG words
+# name -> (kind, default); kind is i(nt), b(ool), d(ouble) or s(tring).
+# Every name changes behavior on the API or the CLI, but four whose only
+# behavior is the baseapi_test.cc Set/Get round trip.
+PARAMS: dict[str, tuple[str, object]] = {
+    "tessedit_pageseg_mode": ("i", PSM_AUTO),
+    "tessedit_ocr_engine_mode": ("i", OEM_DEFAULT),
+    "tessedit_ambigs_training": ("b", False),
+    "tessedit_init_config_only": ("b", False),
     # character recognition restriction lists (SetBlackAndWhitelist,
     # src/ccmain/tesseractclass.cpp:531-553)
-    tessedit_char_whitelist: str = ""
-    tessedit_char_blacklist: str = ""
-    tessedit_char_unblacklist: str = ""
+    "tessedit_char_whitelist": ("s", ""),
+    "tessedit_char_blacklist": ("s", ""),
+    "tessedit_char_unblacklist": ("s", ""),
+    "segment_penalty_dict_frequent_word": ("d", 1.0),
+    "preserve_interword_spaces": ("b", False),
+    "user_defined_dpi": ("i", 0),  # 0 = honor the image's dpi
+    "hocr_font_info": ("b", False),
+    "lstm_choice_mode": ("i", 0),
+    "unlv_tilde_crunching": ("b", False),
+    "textonly_pdf": ("b", False),
+    "tessedit_create_txt": ("b", False),
+    "tessedit_create_hocr": ("b", False),
+    "tessedit_create_alto": ("b", False),
+    "tessedit_create_page_xml": ("b", False),
+    "tessedit_create_tsv": ("b", False),
+    "tessedit_create_pdf": ("b", False),
+    "tessedit_write_unlv": ("b", False),
+    "tessedit_create_boxfile": ("b", False),
+    "tessedit_create_lstmbox": ("b", False),
+    "tessedit_create_wordstrbox": ("b", False),
+}
 
-    def resolve_dpi(self, row_dpi: int | None) -> int:
-        if self.user_defined_dpi:
-            return clamp_dpi(self.user_defined_dpi)
-        return clamp_dpi(row_dpi)
+# bool spellings ParamUtils::SetParam accepts
+_TRUE_STRINGS = {"1", "t", "true", "yes"}
+_FALSE_STRINGS = {"0", "f", "false", "no"}
 
-    def charlists(self) -> tuple[str, str, str] | None:
-        return charlists_of(vars(self))
+# tessdata/configs/* analogues: each config file is a param assignment
+# list; the renderer configs set one tessedit_create_* each
+# (tessdata/configs/{txt,hocr,tsv,alto,page,pdf,unlv,makebox,lstmbox,
+# wordstrbox,digits,quiet}).
+CONFIGS: dict[str, dict[str, str]] = {
+    "txt": {"tessedit_create_txt": "1"},
+    "hocr": {"tessedit_create_hocr": "1", "hocr_font_info": "0"},
+    "tsv": {"tessedit_create_tsv": "1"},
+    "alto": {"tessedit_create_alto": "1"},
+    "page": {"tessedit_create_page_xml": "1"},
+    "pdf": {"tessedit_create_pdf": "1"},
+    "unlv": {"tessedit_write_unlv": "1", "unlv_tilde_crunching": "T"},
+    "makebox": {"tessedit_create_boxfile": "1"},
+    "lstmbox": {"tessedit_create_lstmbox": "1"},
+    "wordstrbox": {"tessedit_create_wordstrbox": "1"},
+    "digits": {"tessedit_char_whitelist": "0123456789-."},
+    "quiet": {},  # nothing to silence
+}
+
+LANGS = ("deva", "eng", "equ", "heb")  # the built-in packs (multilang)
+
+
+def default_params() -> dict[str, object]:
+    """A fresh typed params dict holding every registry default."""
+    return {name: default for name, (_kind, default) in PARAMS.items()}
+
+
+def set_param(params: dict, name: str, value) -> bool:
+    """SetVariable (baseapi.cpp:211-266): parse ``value`` by the kind
+    of ``name`` into ``params``; False for an unknown name or an
+    unparsable value."""
+    spec = PARAMS.get(name)
+    if spec is None:
+        return False
+    kind, _default = spec
+    s = str(value)
+    try:
+        if kind == "i":
+            params[name] = int(s, 10)
+        elif kind == "d":
+            params[name] = float(s)
+        elif kind == "b":
+            low = s.strip().lower()
+            if low not in _TRUE_STRINGS | _FALSE_STRINGS:
+                return False
+            params[name] = low in _TRUE_STRINGS
+        else:
+            params[name] = s
+    except ValueError:
+        return False
+    return True
+
+
+def params_text(params) -> str:
+    """PrintVariables: one ``name<TAB>value`` line per registry name."""
+    return "\n".join(f"{name}\t{params[name]}" for name in PARAMS)
+
+
+def resolve_dpi(params, image_dpi: int | None) -> int:
+    """The page DPI: ``user_defined_dpi`` when set, else the image's
+    claimed resolution, clamped to the credible range."""
+    return clamp_dpi(params["user_defined_dpi"] or image_dpi)
 
 
 def charlists_of(params) -> tuple[str, str, str] | None:

@@ -83,8 +83,9 @@ WORDS_SCHEMA = T.StructType(
 def _words_udf(
     batches: Iterator[pd.DataFrame], font_attrs: bool = False,
     wordlist: list[str] | None = None,
+    charlists: tuple[str, str, str] | None = None,
 ) -> Iterator[pd.DataFrame]:
-    from ..functions.png_codec import decode_gray_png
+    from ..functions.image_codecs import decode_gray_image
     from .recognize import recognize_page_detail
 
     net = None
@@ -118,9 +119,9 @@ def _words_udf(
                 doc_words = doc_words_of.setdefault(doc_id, DocumentWords())
             try:
                 _spans, words, _layout = recognize_page_detail(
-                    decode_gray_png(bytes(png)), int(dpi), dawg, net=net,
+                    decode_gray_image(bytes(png)), int(dpi), dawg, net=net,
                     want_choices=True, font_attrs=font_attrs,
-                    doc_words=doc_words,
+                    doc_words=doc_words, charlists=charlists,
                 )
             except Exception:
                 # per-page isolation (control.cpp:314-322 semantics): emit a
@@ -200,8 +201,10 @@ def ocr_words(
     media: DataFrame,
     font_attrs: bool = False,
     wordlist: list[str] | None = None,
+    charlists: tuple[str, str, str] | None = None,
 ) -> DataFrame:
-    """Word-level OCR results (TSV level 5) for every media span.
+    """Word-level OCR results (TSV level 5) for every media span, the
+    first page of each PNG/JPEG/TIFF blob.
 
     ``font_attrs``: recognize with the font-variant template bank and
     fill the font/bold/italic/mono/pointsize columns (WordFontAttributes
@@ -212,7 +215,10 @@ def ocr_words(
     the permuter column carries real attribution (system_dawg /
     doc_dawg / number / top_choice) instead of the no-dictionary
     defaults; the list ships to executors inside the UDF closure (KBs,
-    the broadcast-small-side discipline)."""
+    the broadcast-small-side discipline).
+
+    ``charlists``: the (blacklist, whitelist, unblacklist) triple of
+    ``config.charlists_of``, as in ``pipeline.ocr_documents``."""
     media_rows = (
         docs.select("doc_id", F.explode("spans").alias("span"))
         .filter(F.col("span.kind") == "media")
@@ -220,7 +226,8 @@ def ocr_words(
         .join(media.select("media_ref", "png", "dpi"), "media_ref", "left")
     )
     def udf(b):
-        return _words_udf(b, font_attrs=font_attrs, wordlist=wordlist)
+        return _words_udf(b, font_attrs=font_attrs, wordlist=wordlist,
+                          charlists=charlists)
 
     return media_rows.mapInPandas(udf, schema=WORDS_SCHEMA)
 

@@ -510,6 +510,23 @@ def test_process_pages_form_feed(page):
     assert "hello world" in parts[0] and "hello world" in parts[1]
 
 
+def test_process_pages_reads_jpeg_and_tiff_bytes(page):
+    """ProcessPages hands encoded pages to SetImage, which sniffs the
+    format: JPEG and TIFF bytes read like PNG bytes."""
+    from tesseract_spark.functions.image_codecs import (
+        encode_gray_jpeg,
+        encode_gray_tiff,
+    )
+
+    t = A.TessBaseAPI()
+    assert t.Init(None, "eng") == 0
+    doc = t.ProcessPages([encode_gray_jpeg(page.image, 95),
+                          encode_gray_tiff([page.image])])
+    parts = doc.split("\f")
+    assert len(parts) == 2
+    assert "hello world" in parts[0] and "hello world" in parts[1]
+
+
 def test_adapt_to_word_str(page):
     """AdaptToWordStr (baseapi.cpp:1640-1700): teaching persists adapted
     templates on the API object and ClearAdaptiveClassifier drops

@@ -7,7 +7,12 @@ matching (intmatcher.cpp:244, adaptmatch.cpp:1133)."""
 
 import numpy as np
 
-from tesseract_spark.config import EngineConfig, charlist_disabled
+from tesseract_spark.config import (
+    charlist_disabled,
+    charlists_of,
+    default_params,
+    set_param,
+)
 from tesseract_spark.functions.fonts import CELL_H, get_font, mask_to_gray
 from tesseract_spark.lstm.templates import get_net
 from tesseract_spark.operators.legacy import recognize_page_legacy
@@ -84,9 +89,10 @@ def test_whitelist_never_disables_space():
 
 
 def test_engine_config_charlists_triple():
-    assert EngineConfig().charlists() is None
-    cfg = EngineConfig(tessedit_char_whitelist="0123456789")
-    assert cfg.charlists() == ("", "0123456789", "")
+    params = default_params()
+    assert charlists_of(params) is None
+    assert set_param(params, "tessedit_char_whitelist", "0123456789")
+    assert charlists_of(params) == ("", "0123456789", "")
 
 
 # ------------------------------------------------------------- engine --

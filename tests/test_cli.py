@@ -44,7 +44,10 @@ def test_outputbase_follows_image_unconditionally():
 
 
 def test_psm_oem_name_maps():
-    assert cli.parse_args(["t", "i", "o", ]).psm == 3
+    # no --psm flag: the registry default
+    assert cli.parse_args(["t", "i", "o", ]).psm is None
+    default = cli.resolve_params(cli.parse_args(["t", "i", "o", ]))
+    assert default["tessedit_pageseg_mode"] == 3
     assert cli.parse_args(["t", "--psm", "sparse_text", "i", "o"]).psm == 11
     assert cli.parse_args(["t", "--psm", "13", "i", "o"]).psm == 13
     assert cli.parse_args(["t", "--oem", "tesseract_only", "i", "o"]).oem == 0
@@ -76,11 +79,13 @@ def test_unknown_argument_rejected(capsys):
 
 
 def test_osd_only_defaults_lang_to_osd(capsys):
-    a = cli.parse_args(["t", "--psm", "0", "i", "o"])
-    assert a.lang == "osd"
-    a = cli.parse_args(["t", "--psm", "0", "-l", "eng", "i", "o"])
-    assert a.lang == "eng"
-    assert "detects only orientation" in capsys.readouterr().err
+    # the rule keys off the resolved PSM: the flag or a -c value
+    for psm in (["--psm", "0"], ["-c", "tessedit_pageseg_mode=0"]):
+        a = cli.parse_args(["t", *psm, "i", "o"])
+        assert cli.resolve_lang(a, cli.resolve_params(a)) == "osd"
+        a = cli.parse_args(["t", *psm, "-l", "eng", "i", "o"])
+        assert cli.resolve_lang(a, cli.resolve_params(a)) == "eng"
+        assert "detects only orientation" in capsys.readouterr().err
 
 
 def test_missing_outputbase_is_error(capsys):
@@ -126,7 +131,7 @@ def test_c_var_selects_renderer_and_overrides_config():
          "i", "o", "hocr"])
     params = cli.resolve_params(a)
     assert cli.select_renderers(params, psm=3) == ["hocr", "tsv"]
-    assert params["hocr_font_info"] == "1"  # -c wins over the config file
+    assert params["hocr_font_info"] is True  # -c wins over the config file
 
 
 def test_unknown_config_rejected():
@@ -282,6 +287,40 @@ def test_cli_whitelist_var(spark, tmp_path):
     base = str(tmp_path / "dg")
     assert cli.run(["t", str(p), base, "digits"], spark=spark) == 0
     assert open(base + ".txt").read() == "0123 4567\n"
+
+
+def _tsv_words(path: str) -> list[str]:
+    rows = [line.split("\t") for line in open(path).read().splitlines()[1:]]
+    return [r[11] for r in rows if r[0] == "5"]
+
+
+def test_cli_word_renderers_honor_charlists(spark, tmp_path):
+    page = compose_page(PageSpec(paragraphs=[["fox dog box"]]))
+    p = tmp_path / "fox.png"
+    p.write_bytes(encode_gray_png(page.image))
+    base = str(tmp_path / "bl")
+    assert cli.run(["t", "-c", "tessedit_char_blacklist=o", str(p), base,
+                    "tsv", "txt"], spark=spark) == 0
+    txt = open(base + ".txt").read()
+    words = _tsv_words(base + ".tsv")
+    assert "o" not in txt and len(txt.split()) == 3
+    assert len(words) == 3 and not any("o" in w for w in words)
+
+
+def test_cli_word_renderers_read_jpeg_and_tiff(spark, tmp_path):
+    from tesseract_spark.functions.image_codecs import (
+        encode_gray_jpeg,
+        encode_gray_tiff,
+    )
+
+    page = compose_page(PageSpec(paragraphs=[["hello world", "second line"]]))
+    for name, data in (("page.jpg", encode_gray_jpeg(page.image, 95)),
+                       ("page.tif", encode_gray_tiff([page.image]))):
+        p = tmp_path / name
+        p.write_bytes(data)
+        base = str(tmp_path / name.replace(".", "_"))
+        assert cli.run(["t", str(p), base, "tsv"], spark=spark) == 0
+        assert _tsv_words(base + ".tsv") == GOLD.split()
 
 
 def test_cli_imagelist_multipage(spark, tmp_path):

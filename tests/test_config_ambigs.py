@@ -1,6 +1,11 @@
 """Config params (params.h subset), DPI clamping, ambiguity substitution."""
 
-from tesseract_spark.config import EngineConfig, clamp_dpi
+from tesseract_spark.config import (
+    clamp_dpi,
+    default_params,
+    resolve_dpi,
+    set_param,
+)
 from tesseract_spark.functions.ambigs import apply_ambigs
 from tesseract_spark.lstm.dawg import Dawg
 
@@ -15,8 +20,10 @@ def test_dpi_clamp_credible_range():
 
 
 def test_config_dpi_override():
-    assert EngineConfig().resolve_dpi(150) == 150
-    assert EngineConfig(user_defined_dpi=600).resolve_dpi(150) == 600
+    params = default_params()
+    assert resolve_dpi(params, 150) == 150
+    assert set_param(params, "user_defined_dpi", "600")
+    assert resolve_dpi(params, 150) == 600
 
 
 def test_ambigs_fix_nondict_word():
