@@ -309,10 +309,9 @@ class TessBaseAPI:
         for part in lang.split("+"):
             if part not in LANGS and part != "osd":
                 return -1
-        if not 0 <= int(oem) <= OEM_DEFAULT:
+        if not set_param(self._params, "tessedit_ocr_engine_mode", oem):
             return -1
         self._lang = lang
-        self._params["tessedit_ocr_engine_mode"] = int(oem)
         self._datapath = datapath
         for name in configs or []:
             for k, v in CONFIGS.get(name, {}).items():

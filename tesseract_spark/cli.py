@@ -43,13 +43,14 @@ from dataclasses import dataclass, field
 
 from . import __version__
 from .config import (
-    CONFIGS, LANGS, OEM_DEFAULT, PSM_AUTO, PSM_OSD_ONLY, charlists_of,
-    default_params, params_text, resolve_dpi, set_param,
+    CONFIGS, LANGS, OEM_COUNT, OEM_DEFAULT, PSM_AUTO, PSM_COUNT,
+    PSM_OSD_ONLY, charlists_of, default_params, params_text, resolve_dpi,
+    set_param,
 )
 
 # stringToPSM (tesseract.cpp:330-363)
 PSM_MAP = {
-    **{str(i): i for i in range(14)},
+    **{str(i): i for i in range(PSM_COUNT)},
     "osd_only": 0,
     "auto_osd": 1,
     "auto_only": 2,
@@ -65,17 +66,15 @@ PSM_MAP = {
     "sparse_text_osd": 12,
     "raw_line": 13,
 }
-PSM_COUNT = 14
 
 # stringToOEM (tesseract.cpp:315-328)
 OEM_MAP = {
-    **{str(i): i for i in range(4)},
+    **{str(i): i for i in range(OEM_COUNT)},
     "tesseract_only": 0,
     "lstm_only": 1,
     "tesseract_lstm_combined": 2,
     "default": 3,
 }
-OEM_COUNT = 4
 
 @dataclass
 class CliArgs:
@@ -310,9 +309,6 @@ def _read_wordfile(path: str) -> list[str]:
         return [w.strip() for w in f if w.strip()]
 
 
-PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-
-
 class CLIError(Exception):
     """Unusable input: reported on stderr with exit code 1 (the
     reference's unreadable-image error path)."""
@@ -413,101 +409,21 @@ def _load_input(image: str, dpi: int) -> tuple[list[dict], list[dict]]:
     return docs_rows, media_rows
 
 
-def _spans_schema():
-    from pyspark.sql import types as T
-
-    return T.StructType(
-        [
-            T.StructField("doc_id", T.StringType()),
-            T.StructField("offset", T.IntegerType()),
-            T.StructField("kind", T.StringType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("media_ref", T.StringType()),
-        ]
-    )
-
-
-def _media_pages(docs, media):
-    """One row per media span — (media_ref, doc_id, pos, png, dpi) — for
-    the per-page task bodies: the posexplode, media filter and media
-    join."""
-    from pyspark.sql import functions as F
-
-    return (
-        docs.select("doc_id", F.posexplode("spans").alias("pos", "span"))
-        .filter(F.col("span.kind") == "media")
-        .select("doc_id", "pos", F.col("span.media_ref").alias("media_ref"))
-        .join(media.select("media_ref", "png", "dpi"), "media_ref", "left")
-    )
-
-
 def _cli_spans(spark, docs, media, params, lang, dict_words,
                dict_patterns):
-    """Span-level extraction routed by the resolved PSM, OEM and -l.
-
-    The default oem 3 + psm AUTO + single-language case delegates to
-    the flagship ``ocr_documents`` (the optimized salted-shuffle path);
-    anything else runs a page-per-row mapInPandas calling the page
-    router (operators.recognize.recognize) — still fully distributed,
-    one task per media batch."""
-    import pandas as pd
-
+    """Span-level extraction: the pipeline's page task
+    (pipeline.ocr_documents) with the resolved OEM, PSM and -l, which
+    it hands the page router (operators.recognize.recognize) page by
+    page."""
     from .pipeline import ocr_documents
 
-    oem = params["tessedit_ocr_engine_mode"]
-    psm = params["tessedit_pageseg_mode"]
-    charlists = charlists_of(params)
-    if oem == OEM_DEFAULT and psm == PSM_AUTO and lang == "eng":
-        flat = ocr_documents(
-            spark, docs, media, dict_words=dict_words,
-            dict_patterns=dict_patterns, charlists=charlists,
-        )
-        return flat.select("doc_id", "offset", "kind", "text", "media_ref")
-
-    uw = list(dict_words) if dict_words else None
-
-    def udf(batches):
-        from .functions.image_codecs import decode_gray_pages
-        from .lstm.dawg import Dawg
-        from .lstm.templates import get_net
-        from .operators.multilang import page_packs
-        from .operators.recognize import recognize
-
-        dawg = Dawg(get_net().charset, uw) if uw else None
-        packs = page_packs(lang, dict_words=uw)
-        for pdf_b in batches:
-            rows = []
-            for doc_id, pos, ref, png, dpi in zip(
-                pdf_b["doc_id"], pdf_b["pos"], pdf_b["media_ref"],
-                pdf_b["png"], pdf_b["dpi"],
-            ):
-                if png is None:
-                    continue
-                # content autodetect + multipage container iteration
-                # (baseapi.cpp:1033-1194, :958-998): every page of the
-                # media blob contributes spans in container order
-                spans = [
-                    s
-                    for gray in decode_gray_pages(bytes(png))
-                    for s in recognize(
-                        gray, int(dpi), oem=oem, psm=psm, dawg=dawg,
-                        packs=packs, charlists=charlists)[0]
-                ]
-                for k, s in enumerate(spans):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "offset": int(pos) * 10_000 + k,
-                            "kind": s.kind,
-                            "text": s.text,
-                            "media_ref": ref,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "offset", "kind", "text",
-                               "media_ref"])
-
-    return _media_pages(docs, media).mapInPandas(udf, schema=_spans_schema())
+    flat = ocr_documents(
+        spark, docs, media, dict_words=dict_words,
+        dict_patterns=dict_patterns, charlists=charlists_of(params),
+        oem=params["tessedit_ocr_engine_mode"],
+        psm=params["tessedit_pageseg_mode"], lang=lang,
+    )
+    return flat.select("doc_id", "offset", "kind", "text", "media_ref")
 
 
 def _render_outputs(
@@ -533,17 +449,6 @@ def _render_outputs(
             F.element_at(parts, 3).cast("int").desc(),
             F.element_at(parts, 2).cast("int"),  # left
         ]
-
-    def _page_heights():
-        # the box family's y axis is bottom-up (box file format); the
-        # page height comes straight from the PNG IHDR (bytes 20:24,
-        # big-endian u32) — pure JVM column expressions, no decode
-        return media.select(
-            "media_ref",
-            F.conv(F.hex(F.expr("substring(png, 21, 4)")), 16, 10)
-            .cast("int")
-            .alias("height_px"),
-        )
 
     out = {}
     word_renderers = [r for r in renderers if r not in ("txt", "osd")]
@@ -604,17 +509,17 @@ def _render_outputs(
             )
         elif r == "box":
             out[r] = (
-                S.to_box_chars(words, page_heights=_page_heights()),
+                S.to_box_chars(words, page_heights=S.page_heights(media)),
                 "box_line", _box_order("box_line"))
         elif r == "lstmbox":
             out[r] = (
-                S.to_lstm_box(words, page_heights=_page_heights()),
+                S.to_lstm_box(words, page_heights=S.page_heights(media)),
                 "lstm_box",
                 ["doc_id", "media_ref", "block_num", "par_num", "line_num"],
             )
         elif r == "wordstrbox":
             out[r] = (
-                S.to_box(words, page_heights=_page_heights()),
+                S.to_box(words, page_heights=S.page_heights(media)),
                 "box_line", _box_order("box_line"))
         elif r == "pdf":
             images = (None if params["textonly_pdf"]
@@ -779,13 +684,17 @@ def run(argv: list[str], spark=None) -> int:
 def _osd_spans(spark, docs, media):
     """PSM_OSD_ONLY: one kind='osd' span per page holding the GetOsdText
     report (TessOsdRenderer, renderer.cpp:229-247); every page of a
-    multipage container reports, offset as on the span path."""
+    multipage container reports, in container order (offset
+    pos * 10_000 + page)."""
     import pandas as pd
+    from pyspark.sql import functions as F
 
     def udf(batches):
         from .functions.image_codecs import decode_gray_pages
         from .operators.osd import get_osd_text
+        from .pipeline import quiet_spark_archives
 
+        quiet_spark_archives()
         for b in batches:
             rows = []
             for doc_id, pos, ref, png in zip(
@@ -808,7 +717,15 @@ def _osd_spans(spark, docs, media):
                 rows, columns=["doc_id", "offset", "kind", "text",
                                "media_ref"])
 
-    return _media_pages(docs, media).mapInPandas(udf, schema=_spans_schema())
+    pages = (
+        docs.select("doc_id", F.posexplode("spans").alias("pos", "span"))
+        .filter(F.col("span.kind") == "media")
+        .select("doc_id", "pos", F.col("span.media_ref").alias("media_ref"))
+        .join(media.select("media_ref", "png"), "media_ref", "left")
+    )
+    return pages.mapInPandas(
+        udf, schema="doc_id string, offset int, kind string, text string,"
+        " media_ref string")
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -26,12 +26,21 @@ PSM_SINGLE_WORD = 8
 PSM_CIRCLE_WORD = 9
 PSM_SPARSE_TEXT = 11
 PSM_RAW_LINE = 13
+PSM_COUNT = 14
 
 # OcrEngineMode (include/tesseract/publictypes.h:265-280)
 OEM_TESSERACT_ONLY = 0
 OEM_LSTM_ONLY = 1
 OEM_TESSERACT_LSTM_COMBINED = 2
 OEM_DEFAULT = 3
+OEM_COUNT = 4
+
+# the enum params take 0 <= value < count (checkArgValues,
+# src/tesseract.cpp:297-313)
+_ENUM_COUNT = {
+    "tessedit_pageseg_mode": PSM_COUNT,
+    "tessedit_ocr_engine_mode": OEM_COUNT,
+}
 
 
 def clamp_dpi(dpi: int | None) -> int:
@@ -108,7 +117,7 @@ def default_params() -> dict[str, object]:
 def set_param(params: dict, name: str, value) -> bool:
     """SetVariable (baseapi.cpp:211-266): parse ``value`` by the kind
     of ``name`` into ``params``; False for an unknown name or an
-    unparsable value."""
+    unparsable value or an enum value out of range."""
     spec = PARAMS.get(name)
     if spec is None:
         return False
@@ -116,7 +125,10 @@ def set_param(params: dict, name: str, value) -> bool:
     s = str(value)
     try:
         if kind == "i":
-            params[name] = int(s, 10)
+            v = int(s, 10)
+            if name in _ENUM_COUNT and not 0 <= v < _ENUM_COUNT[name]:
+                return False
+            params[name] = v
         elif kind == "d":
             params[name] = float(s)
         elif kind == "b":

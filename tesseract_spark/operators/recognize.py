@@ -448,8 +448,12 @@ def recognize(
     5. any other PSM: process_page.
 
     ``detail`` holds extra recognize_page_detail keywords (want_choices,
-    font_attrs, monitor, carry_adapted) for routes 3 and 4, the only
-    routes that return word records; the others return None for them."""
+    font_attrs, monitor, carry_adapted, doc_words) for routes 3 and 4,
+    the only routes that return word records; the others return None
+    for them.
+
+    Callers: TessBaseAPI.Recognize and the pipeline's Spark page task
+    (pipeline._make_ocr_udf), which serves the CLI too."""
     from ..config import (
         OEM_LSTM_ONLY,
         OEM_TESSERACT_LSTM_COMBINED,

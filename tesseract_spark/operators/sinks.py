@@ -86,8 +86,10 @@ def _words_udf(
     charlists: tuple[str, str, str] | None = None,
 ) -> Iterator[pd.DataFrame]:
     from ..functions.image_codecs import decode_gray_image
+    from ..pipeline import quiet_spark_archives
     from .recognize import recognize_page_detail
 
+    quiet_spark_archives()
     net = None
     if font_attrs:
         from ..lstm.templates import get_net_fonts
@@ -577,6 +579,31 @@ def to_page_xml(words: DataFrame) -> DataFrame:
             F.lit("\n</Page></PcGts>"),
         ).alias("page_xml")
     )
+
+
+def page_heights(media: DataFrame) -> DataFrame:
+    """(media_ref, height_px): the height of the page ``ocr_words``
+    reads from each media blob, for the box family's bottom-up y axis
+    (box file format)."""
+
+    def height(png: pd.Series) -> pd.Series:
+        from ..functions.image_codecs import decode_gray_image
+        from ..pipeline import quiet_spark_archives
+
+        quiet_spark_archives()
+
+        def one(data):
+            # per-page isolation: a page that does not decode gave no
+            # words either, so it has no box line to flip
+            try:
+                return decode_gray_image(bytes(data)).shape[0]
+            except Exception:
+                return None
+
+        return png.map(one)
+
+    return media.select(
+        "media_ref", F.pandas_udf(height, "int")("png").alias("height_px"))
 
 
 def to_box(words: DataFrame, page_heights: DataFrame | None = None) -> DataFrame:

@@ -6,6 +6,13 @@ page+recognition stages in one ``mapInPandas`` (Arrow batches, zero per-row
 Python), stitch recognized sub-spans back between pass-through text spans
 with a single window, and reassemble per-document span arrays.
 
+That ``mapInPandas`` body (``_make_ocr_udf``) is the engine's one Spark
+page-OCR task: every engine mode, page-segmentation mode and language
+reaches its recognition path through the page router
+(operators.recognize.recognize), so the flagship queries, lineage,
+streaming and every CLI route share its failed-page marker, user
+dictionaries and offset rule.
+
 Scale notes (100 TB / 1000 executors):
 - the only wide exchanges are (a) the media_ref equi-join (hash join; media
   table is co-bucketable on media_ref at write time), (b) the explicit
@@ -28,9 +35,9 @@ them: pyspark.zip and one per imported pyspark subpackage, the py4j zip
 and the 5,359-entry spark-core jar.  That is 160-230 ms per task, paid
 again by every task on a reused worker, against 3-5 ms for an empty task
 body.  ``quiet_spark_archives()`` runs first in each task body of this
-engine (the page UDF here, ``queries._ocr_chunks`` and
-``derived._render_udf``): it turns those importers' ``invalidate_caches``
-into a no-op for the rest of the worker's life, so only the first task a
+engine (the page UDF here, ``queries._ocr_chunks``,
+``derived._render_udf``, ``cli._osd_spans`` and ``sinks.ocr_words``):
+it turns those importers' ``invalidate_caches`` into a no-op for the rest of the worker's life, so only the first task a
 worker runs pays the re-read.  No output can change: Spark never rewrites
 pyspark.zip, py4j or its jars during a session, a new ``addPyFile`` zip
 arrives under a new path with a fresh importer, archives under the
@@ -51,6 +58,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .config import OEM_DEFAULT, PSM_AUTO
 
 SPAN_STRUCT = T.StructType(
     [
@@ -127,12 +136,18 @@ def _make_ocr_udf(
     dict_patterns: list[str] | None = None,
     adapt_carryover: bool = False,
     charlists: tuple[str, str, str] | None = None,
+    oem: int = OEM_DEFAULT,
+    psm: int = PSM_AUTO,
+    lang: str = "eng",
 ):
-    """Build the page+recognition mapInPandas body.
+    """Build the page+recognition mapInPandas body: one page-router call
+    (operators.recognize.recognize) per decoded page, routed by ``oem``,
+    ``psm`` and ``lang``.
 
-    Heavy state (template net, DAWG) is constructed lazily once per python
-    worker — the executor-side singleton pattern the reference uses for
-    models/DAWGs (src/dict/dawg_cache.cpp, SURVEY §3.1 step 3).
+    Heavy state (template net, DAWG, language packs) is constructed
+    lazily once per python worker — the executor-side singleton pattern
+    the reference uses for models/DAWGs (src/dict/dawg_cache.cpp,
+    SURVEY §3.1 step 3).
     """
 
     def ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -144,7 +159,8 @@ def _make_ocr_udf(
         from .functions.image_codecs import decode_gray_pages
         from .lstm.dawg import CombinedDawg, Dawg, PatternDawg
         from .lstm.templates import get_net
-        from .operators.recognize import recognize_page, recognize_page_detail
+        from .operators.multilang import page_packs
+        from .operators.recognize import recognize
 
         net = get_net()
         dawg = None
@@ -158,18 +174,18 @@ def _make_ocr_udf(
                 else None
             )
             dawg = CombinedDawg(wd, pdw) if pdw is not None else wd
+        packs = page_packs(lang, dict_words=dict_words)
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else -1
         # cross-page adaptive carryover (SwitchAdaptiveClassifier
         # continuity, control.cpp:306-322): with doc-local partitioning
         # (adapt_carryover mode) pages of one document arrive
-        # consecutively and share learned glyph templates
-        carry_doc = None
-        carry_templates = None
-        # document-words dawg carried with the templates: vocabulary
-        # learned on page 1 validates terminology on page N
+        # consecutively and share learned glyph templates, and the
+        # document-words dawg carried with them lets vocabulary learned
+        # on page 1 validate terminology on page N
         # (Dict::document_words_, dict.cpp:648-708)
-        carry_doc_words = None
+        carry_doc = None
+        carry: dict = {}
         for pdf in batches:
             rows = []
             for doc_id, pos, ref, png, dpi in zip(
@@ -195,30 +211,21 @@ def _make_ocr_udf(
                     # container order under one media_ref
                     # (baseapi.cpp:958-998 multipage iteration)
                     imgs = decode_gray_pages(bytes(png))
-                    spans = []
-                    if adapt_carryover and dawg is not None:
-                        if doc_id != carry_doc:
-                            from .lstm.adaptive import AdaptiveTemplates
-                            from .lstm.langmodel import DocumentWords
+                    if adapt_carryover and dawg is not None and doc_id != carry_doc:
+                        from .lstm.adaptive import AdaptiveTemplates
+                        from .lstm.langmodel import DocumentWords
 
-                            carry_doc = doc_id
-                            carry_templates = AdaptiveTemplates()
-                            carry_doc_words = DocumentWords()
-                        for img in imgs:
-                            sp, _words, _layout = recognize_page_detail(
-                                img, int(dpi), dawg, net,
-                                carry_adapted=carry_templates,
-                                charlists=charlists,
-                                doc_words=carry_doc_words,
-                            )
-                            spans.extend(sp)
-                    else:
-                        for img in imgs:
-                            sp, _layout = recognize_page(
-                                img, int(dpi), dawg, net,
-                                charlists=charlists,
-                            )
-                            spans.extend(sp)
+                        carry_doc = doc_id
+                        carry = {"carry_adapted": AdaptiveTemplates(),
+                                 "doc_words": DocumentWords()}
+                    spans = [
+                        s
+                        for img in imgs
+                        for s in recognize(
+                            img, int(dpi), oem=oem, psm=psm, dawg=dawg,
+                            packs=packs, charlists=charlists, **carry,
+                        )[0]
+                    ]
                 except Exception:
                     wall = (time.perf_counter() - t0) * 1000.0
                     rows.append(_failed_row(doc_id, pos, ref, wall, pid))
@@ -259,12 +266,17 @@ def ocr_documents(
     dict_patterns: list[str] | None = None,
     adapt_carryover: bool = False,
     charlists: tuple[str, str, str] | None = None,
+    oem: int = OEM_DEFAULT,
+    psm: int = PSM_AUTO,
+    lang: str = "eng",
 ) -> DataFrame:
     """documents(doc_id, spans) + media(media_ref, png, dpi) -> flat spans.
 
     Returns (doc_id, offset, kind, text, media_ref, confidence, n_lines,
     n_words, n_chars, wall_ms, partition_id) in reading order per
-    document.
+    document.  ``oem``, ``psm`` and ``lang`` pick each page's
+    recognition path through the page router
+    (operators.recognize.recognize).
     """
     exploded = docs.select(
         "doc_id", F.posexplode("spans").alias("pos", "span")
@@ -286,6 +298,7 @@ def ocr_documents(
         dict_words=dict_words, num_partitions=num_partitions,
         dict_patterns=dict_patterns,
         adapt_carryover=adapt_carryover, charlists=charlists,
+        oem=oem, psm=psm, lang=lang,
     )
 
 
@@ -300,6 +313,9 @@ def ocr_from_parts(
     dict_patterns: list[str] | None = None,
     adapt_carryover: bool = False,
     charlists: tuple[str, str, str] | None = None,
+    oem: int = OEM_DEFAULT,
+    psm: int = PSM_AUTO,
+    lang: str = "eng",
 ) -> DataFrame:
     """Pipeline core over pre-split inputs.
 
@@ -377,7 +393,8 @@ def ocr_from_parts(
             "doc_id", "pos"
         )
     ocr = repart.mapInPandas(
-        _make_ocr_udf(dict_words, dict_patterns, adapt_carryover, charlists),
+        _make_ocr_udf(dict_words, dict_patterns, adapt_carryover, charlists,
+                      oem=oem, psm=psm, lang=lang),
         schema=OCR_OUT_SCHEMA,
     )
     unioned = ocr.unionByName(text_full)

@@ -123,6 +123,10 @@ def test_multiple_tess_instance_variables():
         assert api.SetVariable("tessedit_char_blacklist", str_param[i])
         assert api.SetVariable(
             "segment_penalty_dict_frequent_word", ["0.01", "2"][i])
+        # enum values out of range are rejected and leave the value
+        assert api.SetVariable("tessedit_pageseg_mode", "42") is False
+        assert api.SetVariable("tessedit_ocr_engine_mode", "7") is False
+        assert api.oem() == 3
     for i, api in enumerate(tess):
         assert api.GetStringVariable("an_illegal_name") is None
         assert api.GetIntVariable("tessedit_pageseg_mode") == int_param[i]

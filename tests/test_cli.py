@@ -178,11 +178,20 @@ def test_unknown_c_param_warns_and_run_goes_on(capsys):
     args += ["-c", "tessedit_create_hocr=1"]  # a renderer switch
     for name in printed:
         args += ["-c", f"{name}=1"]
+    # enum values out of range are rejected like an unknown name
+    args += ["-c", "tessedit_pageseg_mode=42",
+             "-c", "tessedit_ocr_engine_mode=7"]
     params = cli.resolve_params(cli.parse_args(args))
     err = capsys.readouterr().err
-    assert err.splitlines() == ["Could not set option: no_such_param=1"]
+    assert err.splitlines() == [
+        "Could not set option: no_such_param=1",
+        "Could not set option: tessedit_pageseg_mode=42",
+        "Could not set option: tessedit_ocr_engine_mode=7",
+    ]
     assert "no_such_param" not in params
     assert set(printed) <= set(params)
+    assert params["tessedit_pageseg_mode"] == 3
+    assert params["tessedit_ocr_engine_mode"] == 3
 
 
 def test_unknown_lang_rejected(capsys, page_png, tmp_path):
@@ -321,6 +330,48 @@ def test_cli_word_renderers_read_jpeg_and_tiff(spark, tmp_path):
         base = str(tmp_path / name.replace(".", "_"))
         assert cli.run(["t", str(p), base, "tsv"], spark=spark) == 0
         assert _tsv_words(base + ".tsv") == GOLD.split()
+
+
+def test_cli_box_renderers_read_jpeg_and_tiff(spark, tmp_path):
+    from tesseract_spark.functions.image_codecs import (
+        encode_gray_jpeg,
+        encode_gray_tiff,
+    )
+
+    page = compose_page(PageSpec(paragraphs=[["hello world", "second line"]]))
+    boxes = {}
+    for name, data in (("page.png", encode_gray_png(page.image)),
+                       ("page.tif", encode_gray_tiff([page.image])),
+                       ("page.jpg", encode_gray_jpeg(page.image, 95))):
+        p = tmp_path / name
+        p.write_bytes(data)
+        for config in ("makebox", "wordstrbox"):
+            base = str(tmp_path / f"{name}_{config}")
+            assert cli.run(["t", str(p), base, config], spark=spark) == 0
+            boxes[name, config] = open(base + ".box").read()
+    for config in ("makebox", "wordstrbox"):
+        # PNG and TIFF are both lossless: the same page, the same boxes
+        assert boxes["page.tif", config] == boxes["page.png", config]
+        assert boxes["page.jpg", config].strip()
+
+
+def test_cli_corrupt_page_isolated_on_every_route(spark, page_png, tmp_path):
+    good = open(page_png, "rb").read()
+    bad = tmp_path / "truncated.png"
+    bad.write_bytes(good[: len(good) // 2])
+    lst = tmp_path / "list.txt"
+    lst.write_text(f"{page_png}\n{bad}\n")
+    for route in (["--psm", "6"], ["--oem", "0"]):
+        base = str(tmp_path / route[0].strip("-"))
+        assert cli.run(["t", *route, str(lst), base], spark=spark) == 0
+        assert open(base + ".txt").read() == GOLD + "\n"
+    # a page cut inside its header has no height to read
+    bad.write_bytes(good[:16])
+    base = str(tmp_path / "box")
+    assert cli.run(["t", str(lst), base, "makebox"], spark=spark) == 0
+    box = open(base + ".box").read().splitlines()
+    assert "".join(ln.split(" ")[0] for ln in box) == GOLD.replace(
+        "\n", "").replace(" ", "")
 
 
 def test_cli_imagelist_multipage(spark, tmp_path):

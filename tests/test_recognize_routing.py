@@ -1,22 +1,26 @@
 """Routing pin: which recognition engine a page reaches, and with which
 dictionary, character lists, language packs and DPI, from the two
-public page surfaces — ``TessBaseAPI.Recognize`` and the CLI's per-page
-task body — for every OEM {0,1,2,3} x PSM {0,3,6,7} x language
+public page surfaces — ``TessBaseAPI.Recognize`` and the CLI's Spark
+page tasks — for every OEM {0,1,2,3} x PSM {0,3,6,7} x language
 {eng, heb}, with the OEM and PSM given every way each surface takes
 them (API: Init/SetPageSegMode, SetVariable, Init vars; CLI: flags,
--c pairs, flags over contrary -c pairs).
+-c pairs, flags over contrary -c pairs, and flags with user patterns).
 
 The engine functions are replaced by recorders, so the test pins the
 OEM x PSM x language decision itself (the TessBaseAPI::Recognize ->
 ProcessPage dispatch), not any recognition output.  The CLI's Spark
-DataFrames are stand-ins whose ``mapInPandas`` hands the task body
-back, which then runs in this process over the page the CLI loaded.
+DataFrames are stand-ins that keep every task body handed to
+``mapInPandas`` (the pipeline's page task, or the OSD report task);
+each body then runs in this process over the page the CLI loaded, and
+must quiet the worker's archives before it recognizes anything.
 
 The last tests walk the parameter registry (config.PARAMS): every name
 changes routing or output on the API or the CLI.
 """
 
 from __future__ import annotations
+
+from types import SimpleNamespace
 
 import pandas as pd
 import pytest
@@ -26,6 +30,7 @@ from tesseract_spark import cli
 from tesseract_spark.config import PARAMS, default_params, set_param
 from tesseract_spark.functions.compose import PageSpec, compose_page
 from tesseract_spark.functions.png_codec import encode_gray_png
+from tesseract_spark.lstm.dawg import CombinedDawg
 
 WORDS = ["hello", "world"]
 WHITELIST = "abcdefghijklmnopqrstuvwxyz"
@@ -36,11 +41,10 @@ CHARLISTS = ("", WHITELIST, "")
 # dictionary was passed; ':heb' = language packs, a pack marked
 # 'name/dawg' carries a user-words dictionary (none of WORDS is
 # Hebrew); '@n' = the PSM handed to process_page;
-# '*' = the word pass with symbol choices (want_choices).  'flagship' is
-# the CLI's hand-off to pipeline.ocr_documents.  API rows: the calls of
-# Recognize, then after '|' the calls the first word-level getter adds
-# (the deferred default-engine word pass, when the route returned no
-# word records).
+# '*' = the word pass with symbol choices (want_choices).  API rows:
+# the calls of Recognize, then after '|' the calls the first word-level
+# getter adds (the deferred default-engine word pass, when the route
+# returned no word records).
 API_TABLE = """
 0 0 eng  legacy+dawg
 0 3 eng  legacy+dawg | detail+dawg*
@@ -102,7 +106,7 @@ CLI_TABLE = """
 2 6 heb  combined+dawg
 2 7 heb  combined+dawg
 3 0 eng  osd
-3 3 eng  flagship+dawg
+3 3 eng  detail+dawg
 3 6 eng  process_page+dawg@6
 3 7 eng  process_page+dawg@7
 3 0 heb  osd
@@ -144,6 +148,10 @@ class _Calls:
         self.vgsl_dawgs: list = []
         self.dpis: list[int] = []
         self.font_attrs: list[bool] = []
+        self.dawgs: list = []
+        # engine tokens and 'quiet' (pipeline.quiet_spark_archives) in
+        # call order
+        self.events: list[str] = []
 
     def add(self, name, dawg=None, charlists=None, packs=None, psm=None,
             want_choices=False, dpi=None):
@@ -159,6 +167,9 @@ class _Calls:
         if want_choices:
             tok += "*"
         self.tokens.append(tok)
+        self.events.append(tok)
+        if dawg is not None:
+            self.dawgs.append(dawg)
         if name != "osd":
             self.charlists.append(charlists)
         if dpi is not None:
@@ -167,12 +178,18 @@ class _Calls:
 
 class _Frame:
     """Stands in for every Spark DataFrame (and the session) on the CLI
-    path: each method returns the frame; ``mapInPandas`` returns the
-    task body it was given."""
+    path: each method returns the frame; ``mapInPandas`` also keeps the
+    task body it was given in ``bodies``, shared by every frame derived
+    from this one."""
+
+    def __init__(self, bodies=None):
+        self.bodies = [] if bodies is None else bodies
+
+    def mapInPandas(self, fn, schema=None):
+        self.bodies.append(fn)
+        return self
 
     def __getattr__(self, name):
-        if name == "mapInPandas":
-            return lambda fn, schema=None: fn
         return lambda *a, **k: self
 
 
@@ -180,12 +197,23 @@ class _Session(_Frame):
     """The session stand-in: keeps the media rows the CLI loaded."""
 
     def __init__(self):
+        super().__init__()
         self.media_rows: list[dict] = []
+        self.sparkContext = SimpleNamespace(defaultParallelism=1)
 
     def createDataFrame(self, rows, schema=None):
         if rows and "png" in rows[0]:
             self.media_rows = rows
-        return _Frame()
+        return _Frame(self.bodies)
+
+
+def _batch(media_rows):
+    """The media rows as one task's input batch."""
+    return pd.DataFrame([
+        {"doc_id": "doc-0", "pos": k, "media_ref": m["media_ref"],
+         "png": m["png"], "dpi": m["dpi"]}
+        for k, m in enumerate(media_rows)
+    ])
 
 
 @pytest.fixture
@@ -227,18 +255,14 @@ def calls(monkeypatch):
         c.add("osd")
         return "Page number: 0\n"
 
-    def flagship_rec(spark, docs, media, dict_words=None, charlists=None,
-                     **kw):
-        c.add("flagship", dict_words, charlists)
-        return _Frame()
-
     monkeypatch.setattr(legacy, "recognize_page_legacy", legacy_rec)
     monkeypatch.setattr(legacy, "recognize_page_combined", combined_rec)
     monkeypatch.setattr(recognize, "recognize_pages_vgsl", vgsl_rec)
     monkeypatch.setattr(recognize, "process_page", process_rec)
     monkeypatch.setattr(recognize, "recognize_page_detail", detail_rec)
     monkeypatch.setattr(osd, "get_osd_text", osd_rec)
-    monkeypatch.setattr(pipeline, "ocr_documents", flagship_rec)
+    monkeypatch.setattr(pipeline, "quiet_spark_archives",
+                        lambda: c.events.append("quiet"))
     return c
 
 
@@ -349,6 +373,11 @@ def _cli_argv(oem, psm, lang, form, tmp_path, extra=()):
     words.write_text("\n".join(WORDS) + "\n")
     if form == "flags":
         mode = ["--oem", str(oem), "--psm", str(psm)]
+    elif form == "user_patterns":
+        patterns = tmp_path / "patterns.txt"
+        patterns.write_text("\\d\\d\\d\n")
+        mode = ["--oem", str(oem), "--psm", str(psm),
+                "--user-patterns", str(patterns)]
     elif form == "c":
         mode = ["-c", f"tessedit_ocr_engine_mode={oem}",
                 "-c", f"tessedit_pageseg_mode={psm}"]
@@ -362,9 +391,10 @@ def _cli_argv(oem, psm, lang, form, tmp_path, extra=()):
     ]
 
 
-def _run_cli(argv, gray, tmp_path, monkeypatch):
-    """cli.run over one PNG page on the stand-in session; a per-page
-    task body runs over the media rows the CLI loaded."""
+def _run_cli(argv, gray, tmp_path, monkeypatch, calls):
+    """cli.run over one PNG page on the stand-in session; each task body
+    the CLI built runs over the media rows the CLI loaded, and quiets
+    the worker first."""
     img = tmp_path / "page.png"
     img.write_bytes(encode_gray_png(gray))
     captured = []
@@ -377,17 +407,13 @@ def _run_cli(argv, gray, tmp_path, monkeypatch):
     session = _Session()
     assert cli.run([*argv, str(img), str(tmp_path / "out")],
                    spark=session) == 0
-    (spans,) = captured
-    if not isinstance(spans, _Frame):  # a per-page task body
-        batch = pd.DataFrame([
-            {"doc_id": "doc-0", "pos": k, "media_ref": m["media_ref"],
-             "png": m["png"], "dpi": m["dpi"]}
-            for k, m in enumerate(session.media_rows)
-        ])
-        list(spans(iter([batch])))
+    assert len(captured) == 1 and len(session.bodies) == 1
+    for body in session.bodies:
+        list(body(iter([_batch(session.media_rows)])))
+        assert calls.events[:1] == ["quiet"]
 
 
-CLI_FORMS = ("flags", "c", "flags_over_c")
+CLI_FORMS = ("flags", "c", "flags_over_c", "user_patterns")
 
 
 @pytest.mark.parametrize("oem,psm,lang,expected,form",
@@ -395,8 +421,12 @@ CLI_FORMS = ("flags", "c", "flags_over_c")
 def test_cli_page_routing(spark, calls, gray, monkeypatch, tmp_path,
                           oem, psm, lang, expected, form):
     _run_cli(_cli_argv(oem, psm, lang, form, tmp_path), gray, tmp_path,
-             monkeypatch)
+             monkeypatch, calls)
     _check(calls, expected)
+    if form == "user_patterns":
+        # every dictionary an engine got holds the user patterns too
+        assert all(isinstance(d, CombinedDawg) and d.pattern is not None
+                   for d in calls.dawgs)
 
 
 @pytest.mark.parametrize("dpi_args,dpi", [
@@ -407,9 +437,21 @@ def test_cli_page_routing(spark, calls, gray, monkeypatch, tmp_path,
 def test_cli_dpi_reaches_the_router(spark, calls, gray, monkeypatch,
                                     tmp_path, dpi_args, dpi):
     argv = _cli_argv(3, 7, "eng", "c", tmp_path, extra=dpi_args)
-    _run_cli(argv, gray, tmp_path, monkeypatch)
+    _run_cli(argv, gray, tmp_path, monkeypatch, calls)
     _check(calls, ["process_page+dawg@7"], dpi=dpi)
     assert calls.dpis == [dpi]
+
+
+def test_word_sink_task_quiets_the_worker(spark, calls, gray):
+    from tesseract_spark.operators import sinks
+
+    frame = _Frame()
+    sinks.ocr_words(None, frame, frame, wordlist=WORDS, charlists=CHARLISTS)
+    (body,) = frame.bodies
+    list(body(iter([_batch([
+        {"media_ref": "m-0", "png": encode_gray_png(gray), "dpi": 300}])])))
+    assert calls.events == ["quiet", "detail+dawg*"]
+    _check(calls, ["detail+dawg*"])
 
 
 # ---------------------------------------------------------- registry --
