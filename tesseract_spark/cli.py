@@ -685,7 +685,9 @@ def _osd_spans(spark, docs, media):
     """PSM_OSD_ONLY: one kind='osd' span per page holding the GetOsdText
     report (TessOsdRenderer, renderer.cpp:229-247); every page of a
     multipage container reports, in container order (offset
-    pos * 10_000 + page)."""
+    pos * 10_000 + page).  A media row that is missing or fails to
+    decode or analyze emits one osd span with NULL text, so one bad page
+    never kills the run."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -700,16 +702,20 @@ def _osd_spans(spark, docs, media):
             for doc_id, pos, ref, png in zip(
                 b["doc_id"], b["pos"], b["media_ref"], b["png"]
             ):
-                if png is None:
-                    continue
-                for k, gray in enumerate(decode_gray_pages(bytes(png))):
+                try:
+                    texts = [
+                        get_osd_text(gray, page_number=int(pos) + k)
+                        for k, gray in enumerate(decode_gray_pages(bytes(png)))
+                    ]
+                except Exception:  # a missing row (png None) or a bad page
+                    texts = [None]
+                for k, text in enumerate(texts):
                     rows.append(
                         {
                             "doc_id": doc_id,
                             "offset": int(pos) * 10_000 + k,
                             "kind": "osd",
-                            "text": get_osd_text(
-                                gray, page_number=int(pos) + k),
+                            "text": text,
                             "media_ref": ref,
                         }
                     )

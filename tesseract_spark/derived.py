@@ -258,10 +258,10 @@ def materialize_corpus_bucketed(
     cache_root: str = BENCH_CORPUS,
 ) -> tuple[str, str]:
     """Bucketed variant of materialize_corpus: the media table is written
-    as a catalog table bucketed on media_ref, so the production join reads
-    it shuffle-free (the png payload never moves; see
-    pipeline.ocr_from_parts media_prebucketed).  Returns
-    (documents_path, media_table_name)."""
+    as a catalog table bucketed on media_ref, holding exactly the
+    documents' pages, which ocr_production_bucketed recognizes where
+    they lie (the png payload never moves; see pipeline.ocr_from_parts
+    media_prebucketed).  Returns (documents_path, media_table_name)."""
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
     docs_path, media_path = materialize_corpus(spark, sf_dir, cache_root)
     table = f"tess_media_bkt_{tag}_{n_buckets}"
@@ -293,8 +293,11 @@ def materialize_corpus_bucketed(
 
 
 def ocr_production_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ocr_production over the bucketed media table: identical results,
-    one fewer exchange — the heavy png side is read in bucket layout."""
+    """ocr_production over the bucketed media table, OCR first: identical
+    results.  The page body runs over the media scan coalesced to at most
+    defaultParallelism x 4 tasks (16 on 4 cores) rather than one task per
+    bucket, and only the light per-page results are joined back to the
+    (doc_id, pos, media_ref) refs, so the png payload never shuffles."""
     from .pipeline import ocr_from_parts
 
     docs_path, table = materialize_corpus_bucketed(spark, sf_dir)

@@ -27,7 +27,7 @@ import struct
 
 import numpy as np
 
-from .png_codec import decode_gray_png, encode_gray_png
+from .png_codec import check_dims, classified, decode_gray_png, encode_gray_png
 
 # ---------------------------------------------------------------------------
 # format sniffing (baseapi.cpp:1033-1194 reads by content, not extension)
@@ -44,7 +44,8 @@ def sniff_format(data: bytes) -> str | None:
 
 
 def decode_gray_pages(data: bytes) -> list[np.ndarray]:
-    """Autodetect + decode to grayscale pages (multipage TIFF -> many)."""
+    """Autodetect + decode to grayscale pages (multipage TIFF -> many).
+    Bytes that do not decode raise ValueError, whatever the format."""
     fmt = sniff_format(bytes(data))
     if fmt == "png":
         return [decode_gray_png(bytes(data))]
@@ -206,6 +207,7 @@ def _extend(v: int, t: int) -> int:
     return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
+@classified
 def decode_gray_jpeg(data: bytes) -> np.ndarray:
     """Decode a baseline sequential single-component JPEG to uint8 [H, W]."""
     if data[:2] != b"\xff\xd8":
@@ -243,6 +245,7 @@ def decode_gray_jpeg(data: bytes) -> np.ndarray:
                 qtables[tq] = tbl
         elif marker == 0xC0:  # SOF0 baseline
             _prec, h, w, ncomp = struct.unpack(">BHHB", body[:6])
+            check_dims("JPEG", w, h)
             if ncomp != 1:
                 raise ValueError("only single-component (grayscale) JPEG supported")
             samp, qsel = body[7], body[8]
@@ -448,6 +451,7 @@ _TIFF_TAGS = {
 }
 
 
+@classified
 def decode_gray_tiff(data: bytes) -> list[np.ndarray]:
     """Decode little/big-endian uncompressed gray-8 TIFF; one page per IFD."""
     if data[:2] == b"II":
@@ -461,7 +465,11 @@ def decode_gray_tiff(data: bytes) -> list[np.ndarray]:
         raise ValueError("bad TIFF magic")
     (ifd_off,) = struct.unpack(en + "I", data[4:8])
     pages: list[np.ndarray] = []
+    seen: set[int] = set()
     while ifd_off:
+        if ifd_off in seen:
+            raise ValueError("TIFF IFD chain loops")
+        seen.add(ifd_off)
         (n_ent,) = struct.unpack(en + "H", data[ifd_off : ifd_off + 2])
         tags: dict[str, list[int]] = {}
         for i in range(n_ent):
@@ -484,8 +492,12 @@ def decode_gray_tiff(data: bytes) -> list[np.ndarray]:
         (ifd_off,) = struct.unpack(
             en + "I", data[ifd_off + 2 + 12 * n_ent : ifd_off + 6 + 12 * n_ent]
         )
+        for need in ("width", "height", "strip_offsets"):
+            if need not in tags:
+                raise ValueError(f"TIFF page has no {need} tag")
         w = tags["width"][0]
         h = tags["height"][0]
+        check_dims("TIFF", w, h)
         if tags.get("compression", [1])[0] != 1:
             raise ValueError("only uncompressed TIFF supported")
         if tags.get("bits", [8])[0] != 8 or tags.get("spp", [1])[0] != 1:

@@ -10,12 +10,38 @@ grayscale-8 non-interlaced PNG round-trips.
 
 from __future__ import annotations
 
+import functools
 import struct
 import zlib
 
 import numpy as np
 
 _SIG = b"\x89PNG\r\n\x1a\n"
+
+# the largest page side the reference thresholds (thresholder.cpp:285-288)
+MAX_DIM = 32767
+
+
+def check_dims(fmt: str, w: int, h: int) -> None:
+    """Reject a declared page size of 0 or past MAX_DIM before any
+    buffer of that size is built."""
+    if not (0 < w <= MAX_DIM and 0 < h <= MAX_DIM):
+        raise ValueError(f"{fmt} size {w}x{h} is outside 1..{MAX_DIM}")
+
+
+def classified(decode):
+    """One error class for a decoder: bytes it cannot decode raise
+    ValueError, so the struct, zlib and index errors of a truncated or
+    corrupt stream are re-raised as ValueError."""
+
+    @functools.wraps(decode)
+    def checked(data):
+        try:
+            return decode(data)
+        except (struct.error, zlib.error, IndexError) as e:
+            raise ValueError(f"corrupt image data: {e}") from e
+
+    return checked
 
 
 def _chunk(typ: bytes, data: bytes) -> bytes:
@@ -41,8 +67,10 @@ def encode_gray_png(img: np.ndarray) -> bytes:
     return _SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
 
 
+@classified
 def decode_gray_png(data: bytes) -> np.ndarray:
-    """Decode a grayscale-8 non-interlaced PNG to a uint8 [H, W] array."""
+    """Decode a grayscale-8 non-interlaced PNG to a uint8 [H, W] array.
+    The inflate stops at the h * (w + 1) bytes the header declares."""
     if data[:8] != _SIG:
         raise ValueError("not a PNG (bad signature)")
     pos = 8
@@ -55,6 +83,7 @@ def decode_gray_png(data: bytes) -> np.ndarray:
         pos += 12 + length
         if typ == b"IHDR":
             w, h, depth, ctype, _comp, _filt, interlace = struct.unpack(">IIBBBBB", body)
+            check_dims("PNG", w, h)
             if depth != 8 or ctype != 0 or interlace != 0:
                 raise ValueError(f"unsupported PNG: depth={depth} ctype={ctype} interlace={interlace}")
         elif typ == b"IDAT":
@@ -63,8 +92,11 @@ def decode_gray_png(data: bytes) -> np.ndarray:
             break
     if w is None:
         raise ValueError("missing IHDR")
-    raw = np.frombuffer(zlib.decompress(bytes(idat)), dtype=np.uint8)
-    raw = raw.reshape(h, w + 1)
+    need = h * (w + 1)
+    raw = zlib.decompressobj().decompress(bytes(idat), need)
+    if len(raw) < need:
+        raise ValueError("truncated PNG image data")
+    raw = np.frombuffer(raw, dtype=np.uint8).reshape(h, w + 1)
     filters = raw[:, 0]
     out = np.empty((h, w), dtype=np.uint8)
     if not filters.any():  # fast path: all filter 0 (our own encoder)

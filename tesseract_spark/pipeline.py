@@ -13,14 +13,23 @@ reaches its recognition path through the page router
 streaming and every CLI route share its failed-page marker, user
 dictionaries and offset rule.
 
-Scale notes (100 TB / 1000 executors):
-- the only wide exchanges are (a) the media_ref equi-join (hash join; media
-  table is co-bucketable on media_ref at write time), (b) the explicit
-  salted repartition that balances per-task OCR compute, and (c) the
-  doc_id window+group for stitching. (b) carries only (doc_id, pos,
-  media_ref, png) — no recognition state ever shuffles.
-- OCR compute dominates; partition count should be >= 4x total cores so AQE
-  and the salt keep stragglers bounded (BASELINE.md protocol).
+Scale notes (100 TB / 1000 executors).  The exchanges of each plan:
+- join-first (``ocr_documents``; ``ocr_from_parts`` by default): (a) a
+  media_ref hash exchange of each side of the equi-join into
+  ``num_partitions`` partitions, the png payload's one move, which also
+  balances per-task OCR compute; (b) with ``adapt_carryover`` only, a
+  doc_id exchange of the joined pages; (c) the doc_id exchange of the
+  stitch window.  Recognition state never shuffles.
+- OCR-first (``ocr_from_parts(media_prebucketed=True)``, the job behind
+  ``derived.ocr_production_bucketed``): no heavy exchange.  The page body
+  runs over the media scan coalesced to at most ``num_partitions``
+  tasks, so the png payload stays where it was written and the task
+  count follows the cores, not the table's bucket count.  Only the light
+  per-page results and the (doc_id, pos, media_ref) refs move for the
+  left join back (an exchange, or a broadcast of the results when they
+  are small), then (c).
+- OCR compute dominates; ``num_partitions`` defaults to 4x the default
+  parallelism, so stragglers stay bounded (BASELINE.md protocol).
 - per-task metrics surface in the result rows (wall_ms, partition_id) and
   aggregate into the lineage table (sources/lineage.py) for checkpoint
   resume — the reference's ETEXT_DESC progress/cancel analogue
@@ -257,6 +266,51 @@ def _make_ocr_udf(
     return ocr_batches
 
 
+def _ocr_then_join(
+    media_refs: DataFrame, media: DataFrame, num_partitions: int, udf
+) -> DataFrame:
+    """The bucketed plan's OCR rows: recognize every media row where it
+    was scanned, then join the light results back to the refs.
+
+    The page body runs over the media scan coalesced to at most
+    ``num_partitions`` tasks, with the page key in its ``doc_id`` column
+    and ``pos`` 0, so each page's sub-spans stay keyed (text sub-spans
+    carry a NULL ``media_ref``).  A media row that several refs point to
+    is recognized once and joined to each; a ref with no media row keeps
+    ``_failed_row``'s marker with ``partition_id`` -1, since no OCR task
+    saw it.  Nothing under the coalesce holds memory per input
+    partition, so a task streams its buckets one after another.
+    """
+    pages = (
+        media.select(
+            F.col("media_ref").alias("doc_id"),
+            F.lit(0).alias("pos"),
+            "media_ref",
+            "png",
+            "dpi",
+        )
+        .coalesce(num_partitions)
+        .mapInPandas(udf, schema=OCR_OUT_SCHEMA)
+        .withColumnRenamed("doc_id", "page_ref")
+        .withColumnRenamed("media_ref", "span_ref")
+        .drop("pos")
+    )
+    fail = _failed_row(None, 0, None, 0.0, -1)
+    joined = media_refs.join(
+        pages, media_refs["media_ref"] == pages["page_ref"], "left"
+    )
+    missing = F.col("page_ref").isNull()
+    return joined.select(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.col("pos").cast("int").alias("pos"),
+        "text",
+        F.when(missing, F.col("media_ref")).otherwise(F.col("span_ref"))
+        .alias("media_ref"),
+        *[F.coalesce(c, F.lit(v)).alias(c) for c, v in fail.items()
+          if c not in ("doc_id", "pos", "text", "media_ref")],
+    )
+
+
 def ocr_documents(
     spark: SparkSession,
     docs: DataFrame,
@@ -329,17 +383,20 @@ def ocr_from_parts(
     gives up the media_ref hash's page-level skew defeat, so reserve it
     for corpora whose per-document page counts are bounded.
 
-    ``media_prebucketed``: the media table is a bucketed catalog table on
-    media_ref — the scan itself satisfies the join's distribution, so the
-    heavy png payload NEVER shuffles; only the light (doc_id, pos,
-    media_ref) refs exchange into the bucket layout.  This is the
-    100TB-scale shape: the multi-TB image bytes stay where they were
-    written, and per-query network traffic is proportional to the span
-    index, not the corpus.
+    ``media_prebucketed``: OCR before the join.  The page body runs over
+    the media scan itself, coalesced to at most ``num_partitions`` tasks,
+    and only its light per-page results are left-joined back to the
+    refs (``_ocr_then_join``), so the heavy png payload NEVER shuffles
+    and the task count is sized from the cores, not from the media
+    table's 128 buckets.  The plan recognizes every row of ``media``:
+    it is meant for a media table holding only the documents' own
+    pages, as the materialized corpus does
+    (derived.materialize_corpus_bucketed).  Callers that pass a subset
+    of the documents against a full media table (streaming, lineage) use
+    the join-first plan of ``ocr_documents``.  It cannot be combined
+    with ``adapt_carryover``, which needs pages in document order.
     """
     if num_partitions is None:
-        import os
-
         env = int(os.environ.get("SPARK_GRAFT_PARTITIONS", "0"))
         num_partitions = env or spark.sparkContext.defaultParallelism * 4
     text_full = text_rows.select(
@@ -356,14 +413,15 @@ def ocr_from_parts(
         F.lit(0.0).alias("wall_ms"),
         F.lit(-1).cast("int").alias("partition_id"),
     )
-    media_side = media.select("media_ref", "png", "dpi")
+    udf = _make_ocr_udf(dict_words, dict_patterns, adapt_carryover, charlists,
+                        oem=oem, psm=psm, lang=lang)
     if media_prebucketed:
-        # no manual repartition on either side: EnsureRequirements sees the
-        # bucketed scan's HashPartitioning(media_ref, n_buckets) and adds
-        # exactly one exchange, on the refs side
-        media_rows = media_refs.join(
-            media_side.hint("shuffle_hash"), "media_ref", "left"
-        )
+        if adapt_carryover:
+            raise ValueError(
+                "adapt_carryover needs pages in document order; the bucketed "
+                "plan recognizes media rows before they meet their documents"
+            )
+        ocr = _ocr_then_join(media_refs, media, num_partitions, udf)
     else:
         # pre-partition BOTH sides on media_ref so the join reuses these
         # exchanges (EnsureRequirements adds none) — the heavy png payload
@@ -377,6 +435,7 @@ def ocr_from_parts(
         # would execute the render/scan twice).  Measured: the
         # size-bucketed range scheme concentrated the expensive class
         # (33s straggler vs 9s median) and was rejected.
+        media_side = media.select("media_ref", "png", "dpi")
         media_rows = (
             media_refs.repartition(num_partitions, "media_ref")
             .join(
@@ -387,16 +446,12 @@ def ocr_from_parts(
                 "left",
             )
         )
-    repart = media_rows.select("doc_id", "pos", "media_ref", "png", "dpi")
-    if adapt_carryover:
-        repart = repart.repartition(num_partitions, "doc_id").sortWithinPartitions(
-            "doc_id", "pos"
-        )
-    ocr = repart.mapInPandas(
-        _make_ocr_udf(dict_words, dict_patterns, adapt_carryover, charlists,
-                      oem=oem, psm=psm, lang=lang),
-        schema=OCR_OUT_SCHEMA,
-    )
+        repart = media_rows.select("doc_id", "pos", "media_ref", "png", "dpi")
+        if adapt_carryover:
+            repart = repart.repartition(num_partitions, "doc_id").sortWithinPartitions(
+                "doc_id", "pos"
+            )
+        ocr = repart.mapInPandas(udf, schema=OCR_OUT_SCHEMA)
     unioned = ocr.unionByName(text_full)
     w = Window.partitionBy("doc_id").orderBy("pos", "sub")
     return unioned.withColumn(

@@ -374,6 +374,21 @@ def test_cli_corrupt_page_isolated_on_every_route(spark, page_png, tmp_path):
         "\n", "").replace(" ", "")
 
 
+def test_cli_psm_osd_only_corrupt_page_isolated(spark, page_png, tmp_path):
+    """--psm 0 over one good and one truncated PNG: the run completes
+    and the good page still reports; the bad page's osd span is empty."""
+    good = open(page_png, "rb").read()
+    bad = tmp_path / "truncated.png"
+    bad.write_bytes(good[: len(good) // 2])
+    lst = tmp_path / "list.txt"
+    lst.write_text(f"{page_png}\n{bad}\n")
+    base = str(tmp_path / "osd")
+    assert cli.run(["t", "--psm", "0", str(lst), base], spark=spark) == 0
+    osd = open(base + ".osd").read()
+    assert osd.count("Orientation in degrees: 0") == 1
+    assert "Script: Latin" in osd
+
+
 def test_cli_imagelist_multipage(spark, tmp_path):
     pages = []
     for k, text in enumerate(["page one here", "page two here"]):

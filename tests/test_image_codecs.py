@@ -168,3 +168,91 @@ class TestPipelineAutodetect:
         a = np.full((8, 8), 1, np.uint8)
         b = np.full((8, 8), 2, np.uint8)
         assert decode_gray_image(encode_gray_tiff([a, b]))[0, 0] == 1
+
+
+class TestOneErrorClass:
+    """Bytes a decoder cannot decode raise ValueError, never a struct,
+    zlib, index or key error, and declared sizes are bounded."""
+
+    @staticmethod
+    def _fixtures():
+        img = np.random.default_rng(3).integers(0, 256, (24, 32), dtype=np.uint8)
+        return {
+            "png": encode_gray_png(img),
+            "jpeg": encode_gray_jpeg(img),
+            "tiff": encode_gray_tiff([img, img[::-1]]),
+        }
+
+    def test_every_prefix_decodes_or_raises_value_error(self):
+        for name, data in self._fixtures().items():
+            for n in range(len(data) + 1):
+                try:
+                    pages = decode_gray_pages(data[:n])
+                except ValueError:
+                    continue
+                assert pages and all(p.ndim == 2 and p.size for p in pages), (name, n)
+
+    def test_png_dimension_limit(self):
+        import struct
+        import zlib
+
+        from tesseract_spark.functions.png_codec import _chunk, decode_gray_png
+
+        sig = b"\x89PNG\r\n\x1a\n"
+        for w, h in ((0, 5), (5, 0), (32768, 1), (1, 40000)):
+            ihdr = _chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0))
+            data = sig + ihdr + _chunk(b"IDAT", zlib.compress(b"\x00" * 8))
+            with pytest.raises(ValueError, match="outside"):
+                decode_gray_png(data + _chunk(b"IEND", b""))
+
+    def test_png_inflate_stops_at_declared_size(self):
+        import struct
+        import zlib
+
+        from tesseract_spark.functions.png_codec import _chunk, decode_gray_png
+
+        sig = b"\x89PNG\r\n\x1a\n"
+        ihdr = _chunk(b"IHDR", struct.pack(">IIBBBBB", 3, 2, 8, 0, 0, 0, 0))
+        # a stream that inflates to 1 MB: only the declared 2 x (3 + 1)
+        # bytes are produced
+        bomb = zlib.compress(b"\x00\x07\x07\x07" * (1 << 18))
+        out = decode_gray_png(sig + ihdr + _chunk(b"IDAT", bomb))
+        assert out.shape == (2, 3) and (out == 7).all()
+
+    @staticmethod
+    def _tiff_entry(data, tag):
+        import struct
+
+        (ifd,) = struct.unpack("<I", data[4:8])
+        (n,) = struct.unpack("<H", data[ifd : ifd + 2])
+        for e in range(ifd + 2, ifd + 2 + 12 * n, 12):
+            if struct.unpack("<H", data[e : e + 2])[0] == tag:
+                return e
+        raise AssertionError(tag)
+
+    def test_tiff_bad_width_tag(self):
+        import struct
+
+        good = encode_gray_tiff([np.zeros((4, 4), np.uint8)])
+        e = self._tiff_entry(good, 256)
+        cases = [
+            (slice(e, e + 2), struct.pack("<H", 999), "no width"),  # tag gone
+            (slice(e + 8, e + 12), struct.pack("<I", 0), "outside"),
+            (slice(e + 8, e + 12), struct.pack("<I", 40000), "outside"),
+        ]
+        for where, value, match in cases:
+            data = bytearray(good)
+            data[where] = value
+            with pytest.raises(ValueError, match=match):
+                decode_gray_pages(bytes(data))
+
+    def test_tiff_ifd_loop(self):
+        import struct
+
+        data = bytearray(encode_gray_tiff([np.zeros((4, 4), np.uint8)]))
+        (ifd,) = struct.unpack("<I", data[4:8])
+        (n,) = struct.unpack("<H", data[ifd : ifd + 2])
+        nxt = ifd + 2 + 12 * n
+        data[nxt : nxt + 4] = struct.pack("<I", ifd)  # next IFD = itself
+        with pytest.raises(ValueError, match="loops"):
+            decode_gray_pages(bytes(data))

@@ -94,20 +94,112 @@ def test_bucketed_media_join_identical_and_shuffle_free(spark):
     assert "SelectedBucketsCount" in plan
 
 
-def test_corrupt_media_isolated_not_fatal(spark):
-    """A corrupt/truncated image must not kill the job: the page emits an
-    empty media span with n_chars = -1 (per-page degraded continuation,
-    control.cpp:314-322 semantics) and every other page still OCRs."""
+def test_bucketed_plan_runs_ocr_on_the_media_scan(spark):
+    """The bucketed plan recognizes the media scan where it lies: one
+    MapInPandas with no Exchange under it, over at most num_partitions
+    tasks; only its light output meets the refs."""
+    from tesseract_spark.derived import ocr_production_bucketed
+
+    bdf = ocr_production_bucketed(spark, "/root/testdata/sf0.001")
+    plan = bdf._jdf.queryExecution().executedPlan().toString()
+    initial = plan.split("== Initial Plan ==")[-1].splitlines()
+    at = [i for i, ln in enumerate(initial) if "MapInPandas" in ln]
+    assert len(at) == 1
+    depth = len(initial[at[0]]) - len(initial[at[0]].lstrip(" :+-"))
+    below = []
+    for ln in initial[at[0] + 1:]:
+        if len(ln) - len(ln.lstrip(" :+-")) <= depth:
+            break
+        below.append(ln)
+    assert not any("Exchange" in ln for ln in below), below
+    coalesce = [int(ln.split("Coalesce")[1]) for ln in below if "Coalesce" in ln]
+    num_partitions = spark.sparkContext.defaultParallelism * 4
+    assert coalesce and coalesce[0] <= num_partitions
+
+
+def _page_png(text):
     import numpy as np
 
     from tesseract_spark.functions.fonts import CELL_H, mask_to_gray, render_line
     from tesseract_spark.functions.png_codec import encode_gray_png
-    from tesseract_spark.pipeline import ocr_documents
 
-    line = render_line("fine page")
+    line = render_line(text)
     page = np.zeros((CELL_H + 24, line.shape[1] + 24), dtype=bool)
     page[12 : 12 + CELL_H, 12 : 12 + line.shape[1]] = line
-    good = encode_gray_png(mask_to_gray(page))
+    return bytearray(encode_gray_png(mask_to_gray(page)))
+
+
+def test_bucketed_plan_matches_ocr_documents(spark):
+    """OCR-then-join gives ocr_documents' spans for a corrupt page, a
+    ref with no media row, a media row two refs share and a media row no
+    ref names (absent from the output).  wall_ms and partition_id are
+    per-task measurements and are not compared."""
+    from tesseract_spark.pipeline import ocr_documents, ocr_from_parts
+
+    docs = spark.createDataFrame(
+        [
+            ("a", [("text", "intro words", None, 0), ("media", None, "m-1", 1),
+                   ("media", None, "m-shared", 2)]),
+            ("b", [("media", None, "m-shared", 0), ("media", None, "m-bad", 1),
+                   ("media", None, "m-gone", 2), ("text", "outro", None, 3)]),
+        ],
+        "doc_id string, spans array<struct<kind string, text string,"
+        " media_ref string, offset int>>",
+    )
+    media = spark.createDataFrame(
+        [
+            ("m-1", _page_png("first page"), 300),
+            ("m-shared", _page_png("shared page"), 300),
+            ("m-bad", bytearray(b"\x89PNG not really a png at all"), 300),
+            ("m-orphan", _page_png("nobody reads this"), 300),
+        ],
+        "media_ref string, png binary, dpi int",
+    ).repartition(3)
+    spans = docs.select("doc_id", F.posexplode("spans").alias("pos", "span"))
+    text_rows = spans.filter(F.col("span.kind") == "text").select(
+        "doc_id", "pos", F.col("span.text").alias("text"))
+    media_refs = spans.filter(F.col("span.kind") == "media").select(
+        "doc_id", "pos", F.col("span.media_ref").alias("media_ref"))
+    cols = ["doc_id", "offset", "kind", "text", "media_ref", "confidence",
+            "n_lines", "n_words", "n_chars"]
+    want = ocr_documents(spark, docs, media).select(*cols)
+    got_df = ocr_from_parts(
+        spark, text_rows, media_refs, media, num_partitions=2,
+        media_prebucketed=True,
+    )
+    got = got_df.select(*cols)
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in want.schema]
+    rows = sorted(map(tuple, got.collect()))
+    assert rows == sorted(map(tuple, want.collect()))
+    assert [r for r in rows if r[4] == "m-gone"] == [
+        ("b", 2, "media", None, "m-gone", 0.0, 0, 0, -1)]
+    assert [r[0] for r in rows if r[4] == "m-bad"] == ["b"]
+    assert "nobody reads this" not in {r[3] for r in rows}
+    assert sum("shared page" == r[3] for r in rows) == 2
+    pids = {r.partition_id for r in got_df.collect()} - {-1}
+    assert pids and max(pids) < 2
+
+
+def test_bucketed_plan_rejects_adapt_carryover(spark):
+    """Carryover needs each document's pages in order in one task; the
+    OCR-first plan sees pages before documents, so it refuses."""
+    from tesseract_spark.pipeline import ocr_from_parts
+
+    refs = spark.createDataFrame([], "doc_id string, pos int, media_ref string")
+    texts = spark.createDataFrame([], "doc_id string, pos int, text string")
+    media = spark.createDataFrame([], "media_ref string, png binary, dpi int")
+    with pytest.raises(ValueError, match="adapt_carryover"):
+        ocr_from_parts(spark, texts, refs, media, media_prebucketed=True,
+                       adapt_carryover=True)
+
+
+def test_corrupt_media_isolated_not_fatal(spark):
+    """A corrupt/truncated image must not kill the job: the page emits an
+    empty media span with n_chars = -1 (per-page degraded continuation,
+    control.cpp:314-322 semantics) and every other page still OCRs."""
+    from tesseract_spark.pipeline import ocr_documents
+
     docs = spark.createDataFrame(
         [
             ("ok", [("media", None, "m-ok", 0)]),
@@ -118,7 +210,7 @@ def test_corrupt_media_isolated_not_fatal(spark):
     )
     media = spark.createDataFrame(
         [
-            ("m-ok", bytearray(good), 300),
+            ("m-ok", _page_png("fine page"), 300),
             ("m-bad", bytearray(b"\x89PNG not really a png at all"), 300),
         ],
         "media_ref string, png binary, dpi int",
